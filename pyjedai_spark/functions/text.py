@@ -223,20 +223,6 @@ def token_qgram_combo_keys(tokens_col, q: int = 6, threshold: float = 0.95,
     return F.array_distinct(F.flatten(F.transform(t_, per_token)))
 
 
-def token_hash_u32(tok: Column) -> Column:
-    """Deterministic 32-bit token hash = first 8 hex chars of md5.
-
-    Portable across Spark and DuckDB (both expose md5 as lowercase hex),
-    which keeps MinHash/SimHash signatures oracle-checkable.
-    """
-    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
-
-
-def token_hashes(tokens_col) -> Column:
-    """array<string> -> array<long> of 32-bit hashes."""
-    return F.transform(_col(tokens_col), token_hash_u32)
-
-
 def word_shingles(tokens_col, w: int, join_sep: str = " ") -> Column:
     """w-token rolling shingles (non-distinct order preserved) from a
     *non-distinct* token array — the unit for substring/long-span dedup."""

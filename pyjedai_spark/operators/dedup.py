@@ -7,12 +7,14 @@ fingerprints for long-span ("suffix-array style") duplicates, exact
 hash dedup, and n-gram Jaccard verification.
 
 Every signature here is built from PORTABLE hashes (md5 hex prefix ->
-uint32, affine universal hashing mod a >2^32 prime) expressed as Spark
-column expressions, so a DuckDB oracle can reproduce signatures
-bit-for-bit — no RNG, no JVM-specific hash.
+uint32, affine universal hashing mod a >2^32 prime), computed in
+vectorized Arrow pandas-UDF kernels (MinHash, SimHash, and the verify
+intersection), so a DuckDB oracle reproduces the same arithmetic
+bit-for-bit — no RNG, no JVM-specific hash. The tests check each kernel
+against an independent pure-column reference.
 
 Scale design:
-- signatures are computed scan-side (one pass, codegen, no shuffle);
+- signatures are computed scan-side (one pass, no shuffle);
 - candidates come from groupBy(band) / groupBy(chunk) shuffles whose
   fan-out is bounded by band width, never an n^2 cross join;
 - hot buckets (boilerplate pages) are size-capped before pair
@@ -21,6 +23,9 @@ Scale design:
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -122,23 +127,51 @@ _TOKEN_HASH_CACHE: dict = {}
 _TOKEN_HASH_CACHE_CAP = 4_000_000
 
 
+def _doc_hasher(use_cache: bool):
+    """-> hash_doc(toks): one doc's token hashes as an int64 array, each
+    the first 8 hex chars of the token's md5 — the portable u32 token
+    hash both signature kernels and the DuckDB oracles share.
+    ``use_cache`` routes lookups through ``_TOKEN_HASH_CACHE`` (unit
+    tokens only). A closure, so the kernels that call it pickle it by
+    value and Python workers never import this package."""
+    cache = _TOKEN_HASH_CACHE if use_cache else None
+
+    def hash_doc(toks):
+        md5 = hashlib.md5
+        hs = np.empty(len(toks), dtype=np.int64)
+        if cache is None:
+            for i, t in enumerate(toks):
+                hs[i] = int(md5(t.encode("utf-8", "surrogatepass"))
+                            .hexdigest()[:8], 16)
+            return hs
+        for i, t in enumerate(toks):
+            v = cache.get(t)
+            if v is None:
+                v = int(md5(t.encode("utf-8", "surrogatepass"))
+                        .hexdigest()[:8], 16)
+                if len(cache) < _TOKEN_HASH_CACHE_CAP:
+                    cache[t] = v
+            hs[i] = v
+        return hs
+
+    return hash_doc
+
+
 def _make_sig_udf(k: int, use_cache: bool = True):
     """Vectorized Arrow kernel: array<string> tokens -> array<long>[k]
-    MinHash signature, bit-identical to the expression path (same md5
-    u32 token hash, same affine coeffs, same mod-P arithmetic; numpy
-    int64 is exact here because a <= 1e8 and h < 2^32 keep a*h+b below
-    2^63; NULL token arrays propagate NULL exactly like the expression
-    fold — the [P]*k sentinel is only for EMPTY docs). Exists because
-    the expression path's higher-order-function fold is interpreted JVM
+    MinHash signature: the md5-u32 token hash, then for each of the k
+    affine coeffs min over tokens of (a*h + b) mod P. numpy int64 is
+    exact here because a <= 1e8 and h < 2^32 keep a*h+b below 2^63.
+    NULL token arrays give a NULL signature (as the DuckDB oracles
+    propagate NULL); EMPTY ones give the [P]*k sentinel. The tests pin
+    it against an independent pure-column reference. A kernel, not a
+    higher-order-function fold, because the fold is interpreted JVM
     code whose per-token array allocation makes signature compute
     GC-bound — measured NOT scaling with cores (2->8 cores gave only
     1.2x on the 250k-doc corpus, r5 scaling forensics in BENCH.md §3).
-    This path moves the hot loop into numpy inside per-core Python
-    workers: no shared-heap GC coupling, and (for unit tokens) a
-    per-worker token-hash cache exploits the Zipfian token law."""
-    import hashlib
-
-    import numpy as np
+    Here the hot loop runs in numpy inside per-core Python workers: no
+    shared-heap GC coupling, and (for unit tokens) a per-worker
+    token-hash cache exploits the Zipfian token law."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -146,42 +179,22 @@ def _make_sig_udf(k: int, use_cache: bool = True):
     A = np.array([a for a, _ in coeffs], dtype=np.int64)
     B = np.array([b for _, b in coeffs], dtype=np.int64)
     empty_sig = [P] * k
+    hash_doc = _doc_hasher(use_cache)
 
     # annotations attached as OBJECTS (not strings) below: pandas is
     # imported lazily here, so the usual `pd.Series` string annotations
     # from `from __future__ import annotations` would not resolve
     # against module globals during pandas_udf type inference
     def sig_udf(tok_series):
-        cache = _TOKEN_HASH_CACHE if use_cache else None
-        md5 = hashlib.md5
         out = []
         for toks in tok_series:
             if toks is None:
-                # expression fold: aggregate(NULL, ...) -> NULL; the
-                # DuckDB oracles propagate NULL the same way
                 out.append(None)
-                continue
-            if len(toks) == 0:
+            elif len(toks) == 0:
                 out.append(empty_sig)
-                continue
-            hs = np.empty(len(toks), dtype=np.int64)
-            i = 0
-            if cache is None:
-                for t in toks:
-                    hs[i] = int(md5(t.encode("utf-8", "surrogatepass"))
-                                .hexdigest()[:8], 16)
-                    i += 1
             else:
-                for t in toks:
-                    v = cache.get(t)
-                    if v is None:
-                        v = int(md5(t.encode("utf-8", "surrogatepass"))
-                                .hexdigest()[:8], 16)
-                        if len(cache) < _TOKEN_HASH_CACHE_CAP:
-                            cache[t] = v
-                    hs[i] = v
-                    i += 1
-            out.append(((hs[:, None] * A + B) % P).min(axis=0))
+                hs = hash_doc(toks)
+                out.append(((hs[:, None] * A + B) % P).min(axis=0))
         return pd.Series(out)
 
     sig_udf.__annotations__ = {"tok_series": pd.Series, "return": pd.Series}
@@ -189,55 +202,18 @@ def _make_sig_udf(k: int, use_cache: bool = True):
 
 
 def minhash_signatures(docs: DataFrame, k: int = 32, shingle_size: int = 1,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       impl: str | None = None) -> DataFrame:
+                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(eid, sig array<long>[k]) MinHash signature over token (or
-    token-shingle) sets — one scan, no shuffle.
-
-    ``impl``: ``"arrow"`` (default) runs the hash+fold in a vectorized
-    numpy pandas_udf (see :func:`_make_sig_udf` — the expression fold
-    is GC-bound and does not scale with cores); ``"expr"`` keeps the
-    pure-column higher-order-function form (useful where Python
-    workers are unavailable). Both produce bit-identical signatures
-    (pinned by tests/test_new_operators.py)."""
-    import os as _os
-    impl = impl or _os.environ.get("PYJEDAI_MINHASH_IMPL", "arrow")
+    token-shingle) sets — one scan, no shuffle; the hash + min fold
+    runs in the vectorized numpy kernel :func:`_make_sig_udf`."""
     toks = T.tokens(F.col(text_col))
     if shingle_size > 1:
         toks = F.array_distinct(
             T.word_shingles(T.tokens(F.col(text_col), distinct=False), shingle_size)
         )
-    docs = ensure_parallelism(docs)
-    if impl == "arrow":
-        sig_udf = _make_sig_udf(k, use_cache=(shingle_size == 1))
-        return docs.select(F.col(id_col).alias("eid"),
-                           sig_udf(toks).alias("sig"))
-    hashed = T.token_hashes(toks)
-
-    # ALL k permutation minima in ONE fold over the token-hash array.
-    # The naive form — k separate array_min(transform(hashed, perm_i)) —
-    # re-evaluates `hashed` (an md5 per token) k times, because Catalyst
-    # subexpression elimination cannot extract common children out of
-    # lambda bodies; that made signatures the dominant cost at scale
-    # (32x the md5 work). Here `hashed` is the aggregate input, evaluated
-    # once per row; each token updates the k running minima via zip_with.
-    # Arithmetic is unchanged, so signatures (and the DuckDB oracles that
-    # reproduce them bit-for-bit) are identical. The [P]*k zero value
-    # doubles as the empty-doc sentinel signature.
-    coeffs = F.array(*[
-        F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-        for a, b in minhash_coeffs(k)
-    ])
-    zero = F.array(*[F.lit(P)] * k).cast("array<long>")
-    sig = F.aggregate(
-        hashed,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc, coeffs,
-            lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(P)),
-        ),
-    )
-    return docs.select(F.col(id_col).alias("eid"), sig.alias("sig"))
+    sig_udf = _make_sig_udf(k, use_cache=(shingle_size == 1))
+    return ensure_parallelism(docs).select(F.col(id_col).alias("eid"),
+                                           sig_udf(toks).alias("sig"))
 
 
 def lsh_bands(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -254,6 +230,15 @@ def lsh_bands(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
         ).alias("band_idx", "band_hash"),
     )
     return out
+
+
+def _band_keys(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(key, eid) with key = "<band_idx>|<band_hash>": the LSH bucket
+    key of the batch candidate join AND of the streaming band stores,
+    which persist it — the format must stay byte-identical."""
+    return lsh_bands(sigs, bands, rows).select(
+        F.concat_ws("|", F.col("band_idx"), F.col("band_hash")).alias("key"),
+        "eid")
 
 
 _MAX_BUCKET_DEFAULT = object()  # sentinel: distinguishes "caller left the
@@ -287,19 +272,15 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8,
     if max_bucket is _MAX_BUCKET_DEFAULT:
         max_bucket = None if salted_chunk is not None else 1000
     rows = rows or k // bands
-    # Materialize the signature table ONCE. Projection collapse would
-    # otherwise inline the signature fold into all `bands` band-hash
-    # expressions AND both self-join sides (lambda bodies are opaque to
-    # subexpression elimination) — a 2 x bands recompute of the whole
-    # signature pass (measured 249s -> 9s at sf0.1). At cluster scale
-    # this materialization is the per-stage signature checkpoint the
-    # pipeline writes to Iceberg anyway, and it is 8x smaller than
-    # checkpointing the exploded band table.
+    # Materialize the signature table ONCE. The band-key table feeds
+    # both self-join sides, and each un-materialized reference would
+    # re-run the whole signature pass (measured 249s -> 9s at sf0.1).
+    # At cluster scale this materialization is the per-stage signature
+    # checkpoint the pipeline writes to Iceberg anyway, and it is 8x
+    # smaller than checkpointing the exploded band table.
     sigs = minhash_signatures(docs, k, shingle_size, id_col, text_col) \
         .localCheckpoint()
-    b = lsh_bands(sigs, bands, rows)
-    b = b.select(F.concat_ws("|", F.col("band_idx"), F.col("band_hash")).alias("key"),
-                 "eid")
+    b = _band_keys(sigs, bands, rows)
     if salted_chunk is not None:
         from .block_building import block_pairs_salted
         return block_pairs_salted(b, chunk=salted_chunk)
@@ -314,14 +295,13 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8,
 
 
 def _make_inter_udf():
-    """Vectorized Arrow kernel for the verify stage: (t1, t2) pair of
-    array<string> columns -> |set(t1) ∩ set(t2)| as a nullable long,
-    NULL when either array is NULL — exactly the value
-    ``size(array_intersect(t1, t2))`` produces (array_intersect dedups
-    its output, so plain set intersection matches even for non-distinct
-    inputs; NULL propagates identically under ANSI size semantics).
+    """Vectorized Arrow kernel for the verify stages of the dedup and
+    join operators: (id1, t1, id2, t2) -> |set(t1) ∩ set(t2)| as a
+    nullable long, NULL when either array is NULL — the value
+    ``size(array_intersect(t1, t2))`` gives, which the tests use as the
+    reference (set intersection dedups, so non-distinct inputs agree).
 
-    Exists for the same reason as :func:`_make_sig_udf`: the
+    A kernel for the same reason as :func:`_make_sig_udf`: the
     ``array_intersect`` expression allocates a fresh JVM hash set per
     row on the shared executor heap, which the r5 scaling forensics
     measured at only 2.2-2.4x throughput on 4x cores (BENCH.md §3 —
@@ -362,8 +342,7 @@ def _make_inter_udf():
 
 def jaccard_verify(pairs: DataFrame, docs: DataFrame, threshold: float,
                    shingle_size: int = 1, id_col: str = "doc_id",
-                   text_col: str = "text", round_to: int = 6,
-                   impl: str | None = None) -> DataFrame:
+                   text_col: str = "text", round_to: int = 6) -> DataFrame:
     """Exact token(-shingle) Jaccard on candidate pairs; keep >= threshold.
     (True Jaccard inter/union — the verification step of a MinHash
     pipeline, not the reference's quirky matcher form.)
@@ -375,16 +354,9 @@ def jaccard_verify(pairs: DataFrame, docs: DataFrame, threshold: float,
     2M docs), and at crawl scale the materialization is bounded by the
     candidate set, not the corpus.
 
-    ``impl``: ``"arrow"`` (default) computes the intersection size in a
-    vectorized pandas_udf (see :func:`_make_inter_udf` — the
-    ``array_intersect`` expression allocates per-row on the shared JVM
-    heap and was the last stage not scaling with cores); ``"expr"``
-    keeps the pure-column form. The union/round/threshold arithmetic
-    stays JVM-side in BOTH impls, so results are bit-identical (pinned
-    by tests/test_new_operators.py::
-    test_jaccard_verify_arrow_expr_identical)."""
-    import os as _os
-    impl = impl or _os.environ.get("PYJEDAI_VERIFY_IMPL", "arrow")
+    The intersection size comes from the vectorized kernel
+    :func:`_make_inter_udf`; the union/round/threshold arithmetic stays
+    JVM-side."""
     # Materialize the pair set ONCE: it feeds two plan branches (the
     # cand_ids semi-join driving tdf below, and the final endpoint
     # joins), and when the caller hands a lazy candidate plan (the
@@ -408,10 +380,7 @@ def jaccard_verify(pairs: DataFrame, docs: DataFrame, threshold: float,
         pairs.join(tdf.select(F.col("_id").alias("id1"), F.col("_t").alias("_t1")), "id1")
         .join(tdf.select(F.col("_id").alias("id2"), F.col("_t").alias("_t2")), "id2")
     )
-    if impl == "arrow":
-        inter = _make_inter_udf()("id1", "_t1", "id2", "_t2").cast("double")
-    else:
-        inter = F.size(F.array_intersect("_t1", "_t2")).cast("double")
+    inter = _make_inter_udf()("id1", "_t1", "id2", "_t2").cast("double")
     union = (F.size("_t1") + F.size("_t2") - inter)
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
@@ -437,50 +406,31 @@ SIMHASH_BITS = 32
 
 def _make_simhash_udf():
     """Vectorized Arrow kernel: array<string> tokens -> 32-bit SimHash
-    as a nullable long; NULL for NULL or EMPTY token arrays, which the
-    caller filters out — exactly the rows the aggregate path never
-    emits (explode drops null/empty arrays, so those eids are absent
-    from the groupBy output, as is the oracle's unnest).
+    as a nullable long; NULL for NULL or EMPTY token arrays (the caller
+    drops those docs, as the oracle's unnest does).
 
-    Same u32 token hash as :func:`..functions.text.token_hash_u32`
-    (md5 hex prefix) via the shared per-worker unit-token cache, and
-    the same integer arithmetic as the 32-conditional-sum aggregate
-    (bit_j set iff 2*ones_j - n > 0) — order-independent sums, so the
-    signature is bit-identical (pinned by
-    test_simhash_arrow_expr_identical). Exists for the same reason as
-    :func:`_make_sig_udf`: it computes the signature in one scan with
-    ZERO shuffle (the aggregate path explodes every token hash and
-    exchanges per-eid partials), and moves the hot loop off the shared
-    executor heap into per-core Python workers."""
-    import hashlib
-
-    import numpy as np
+    The md5-u32 token hash of :func:`_make_sig_udf` (unit tokens, so
+    through the shared token-hash cache), then bit_j set iff
+    2*ones_j - n > 0 — order-independent sums; the tests pin it against
+    an independent 32-conditional-sum column reference. A kernel for
+    the same reason as :func:`_make_sig_udf`: the signature comes from
+    one scan with ZERO shuffle (an aggregate form explodes every token
+    hash and exchanges per-eid partials), and the hot loop runs off the
+    shared executor heap in per-core Python workers."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
     weights = np.int64(1) << bit_idx
+    hash_doc = _doc_hasher(use_cache=True)
 
     def simhash_udf(tok_series):
-        cache = _TOKEN_HASH_CACHE  # unit tokens: same namespace/value
-        # as the MinHash kernel's md5-u32, so the cache is shared
-        md5 = hashlib.md5
         out = []
         for toks in tok_series:
             if toks is None or len(toks) == 0:
                 out.append(None)
                 continue
-            hs = np.empty(len(toks), dtype=np.int64)
-            i = 0
-            for t in toks:
-                v = cache.get(t)
-                if v is None:
-                    v = int(md5(t.encode("utf-8", "surrogatepass"))
-                            .hexdigest()[:8], 16)
-                    if len(cache) < _TOKEN_HASH_CACHE_CAP:
-                        cache[t] = v
-                hs[i] = v
-                i += 1
+            hs = hash_doc(toks)
             ones = ((hs[:, None] >> bit_idx) & 1).sum(axis=0)
             out.append(int(weights[2 * ones - len(toks) > 0].sum()))
         return pd.Series(out, dtype="Int64")
@@ -490,49 +440,24 @@ def _make_simhash_udf():
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       impl: str | None = None) -> DataFrame:
-    """(eid, simhash long): 32-bit SimHash over distinct tokens.
+                       text_col: str = "text") -> DataFrame:
+    """(eid, simhash long): 32-bit SimHash over distinct tokens, computed
+    in one scan with no shuffle by :func:`_make_simhash_udf`.
 
     bit_j(sig) = 1  iff  sum_tokens(2*bit_j(h(token)) - 1) > 0.
 
-    ``impl``: ``"arrow"`` (default) computes the whole signature in a
-    vectorized pandas_udf — one scan, no shuffle (see
-    :func:`_make_simhash_udf`); ``"expr"`` keeps the pure-JVM form: 32
-    conditional sums over the exploded token-hash list — a single hash
-    aggregate, but one full exchange of per-eid partials and an
-    interpreted shared-heap hot loop. Both emit bit-identical rows
-    (docs with NULL/empty token arrays appear in neither)."""
-    import os as _os
-    impl = impl or _os.environ.get("PYJEDAI_SIMHASH_IMPL", "arrow")
-    if impl == "arrow":
-        sig_udf = _make_simhash_udf()
-        # drop NULL/empty-token docs BEFORE the kernel with a plain
-        # column predicate (size(tokens) > 0 — NULL text gives a NULL
-        # predicate, dropped): filtering on the kernel OUTPUT instead
-        # lets Catalyst push that filter below ensure_parallelism's
-        # exchange and evaluate the UDF twice (observed in the plan)
-        toks = T.tokens(F.col(text_col))
-        return (ensure_parallelism(docs)
-                .where(F.size(toks) > 0)
-                .select(F.col(id_col).alias("eid"),
-                        sig_udf(toks).alias("simhash")))
-    toks = ensure_parallelism(docs).select(
-        F.col(id_col).alias("eid"),
-        F.explode(T.token_hashes(T.tokens(F.col(text_col)))).alias("h"))
-    sums = toks.groupBy("eid").agg(*[
-        F.sum(
-            (F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"b{j}")
-        for j in range(SIMHASH_BITS)
-    ])
-    sig = None
-    for j in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"b{j}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long"))
-        term = bit * F.lit(1 << j).cast("long")
-        sig = term if sig is None else sig + term
-    return sums.select("eid", sig.alias("simhash"))
+    Docs with NULL/empty token arrays get no row."""
+    sig_udf = _make_simhash_udf()
+    # drop NULL/empty-token docs BEFORE the kernel with a plain column
+    # predicate (size(tokens) > 0 — NULL text gives a NULL predicate,
+    # dropped): filtering on the kernel OUTPUT instead lets Catalyst
+    # push that filter below ensure_parallelism's exchange and evaluate
+    # the UDF twice (observed in the plan)
+    toks = T.tokens(F.col(text_col))
+    return (ensure_parallelism(docs)
+            .where(F.size(toks) > 0)
+            .select(F.col(id_col).alias("eid"),
+                    sig_udf(toks).alias("simhash")))
 
 
 def simhash_candidate_pairs(docs: DataFrame, max_hamming: int = 3,
@@ -545,9 +470,8 @@ def simhash_candidate_pairs(docs: DataFrame, max_hamming: int = 3,
     bit_count(xor) <= max_hamming. Returns (id1, id2, hamming)."""
     # Materialize signatures ONCE: sigs feeds both sides of the
     # within-chunk self-join below, and without a barrier each side
-    # re-runs the whole explode + 32-sum signature aggregation (the
-    # dominant cost — the plan showed two identical scan->explode->
-    # agg subtrees). Same reasoning as the minhash sigs checkpoint.
+    # re-runs the whole signature scan. Same reasoning as the minhash
+    # sigs checkpoint.
     sigs = simhash_signatures(docs, id_col, text_col).localCheckpoint()
     width = SIMHASH_BITS // chunks
     mask = (1 << width) - 1

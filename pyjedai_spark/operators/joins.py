@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from .dedup import _make_inter_udf
 
 
 def _join_tokens(col, tokenization: str, qgrams: int):
@@ -67,30 +68,6 @@ def _multiset(toks) -> "F.Column":
     )
 
 
-def _intersect_count(id1, t1, id2, t2, impl: str | None = None):
-    """Common-token count |set(t1) ∩ set(t2)| for the verify joins.
-
-    ``impl="arrow"`` (default, same ``PYJEDAI_VERIFY_IMPL`` switch as
-    :func:`..dedup.jaccard_verify`) computes it in the vectorized
-    pandas_udf kernel — the ``array_intersect`` expression allocates a
-    per-row hash set on the shared executor heap, the allocation class
-    the round-5 scaling forensics measured at 2.2–2.4× on 4× cores;
-    ``impl="expr"`` keeps the pure-column form. Join tokenizations are
-    distinct-by-construction (sets, or occurrence-suffixed multisets)
-    and ``array_intersect`` dedups its output, so both impls return the
-    same count; the similarity arithmetic consuming it stays JVM-side
-    (integral ``/`` promotes to double either way) — bit-identical
-    output, pinned by test_ejoin_arrow_expr_identical."""
-    import os as _os
-
-    impl = impl or _os.environ.get("PYJEDAI_VERIFY_IMPL", "arrow")
-    if impl == "arrow":
-        from .dedup import _make_inter_udf
-
-        return _make_inter_udf()(id1, t1, id2, t2)
-    return F.size(F.array_intersect(t1, t2))
-
-
 def _sim_expr(metric: str, c, f1, f2):
     if metric == "cosine":
         return c / F.sqrt(f1 * f2)
@@ -101,14 +78,44 @@ def _sim_expr(metric: str, c, f1, f2):
     raise ValueError(f"unknown join metric {metric}")
 
 
-def _pair_sims(docs: DataFrame, metric: str, tokenization: str, qgrams: int,
-               id_col: str, text_col: str, round_to: int | None) -> DataFrame:
+def _token_index(docs: DataFrame, tokenization: str, qgrams: int,
+                 id_col: str, text_col: str):
+    """The token index the three joins share -> (toks, ex, ranked):
+
+    - ``toks`` (eid, toks): tokenized ONCE and materialized — every
+      caller reads it from several plan branches (sizes, the df count,
+      the df join's probe side, the verify endpoint joins), and each
+      un-materialized reference re-runs the scan + tokenize;
+    - ``ex`` (eid, f, tok): its explode, f = the doc's token count;
+    - ``ranked`` (tok, eid, f, df, _rn): ``ex`` plus each token's global
+      document frequency df and its rank _rn within the doc in (df, tok)
+      order — the prefix order of the AllPairs/PPJoin filters.
+
+    ``ex`` and ``ranked`` are lazy; each caller places its own barrier."""
     toks = docs.select(
         F.col(id_col).alias("eid"),
         _join_tokens(F.col(text_col), tokenization, qgrams).alias("toks"),
-    ).localCheckpoint()  # feeds sizes + both exploded self-join sides
+    ).localCheckpoint()
+    ex = toks.select("eid", F.size("toks").alias("f"),
+                     F.explode("toks").alias("tok"))
+    # global document-frequency order. NOT broadcast: real webtext
+    # vocabulary (typos, hashes, URLs) is billions of tokens — a full-df
+    # broadcast OOMs the driver. A plain shuffle join on the token key
+    # is one extra exchange and scales; AQE converts it to broadcast
+    # automatically when the vocab is genuinely small.
+    dfreq = ex.groupBy("tok").agg(F.count("*").alias("df"))
+    w = Window.partitionBy("eid").orderBy(F.col("df").asc(), F.col("tok").asc())
+    ranked = ex.join(dfreq, "tok").withColumn("_rn", F.row_number().over(w))
+    return toks, ex, ranked
+
+
+def _pair_sims(docs: DataFrame, metric: str, tokenization: str, qgrams: int,
+               id_col: str, text_col: str, round_to: int | None) -> DataFrame:
+    """Exhaustive similarity of every token-sharing pair (both orders):
+    the token-join count of common tokens, no prefix filter and no
+    verify kernel — the brute-force path of the zero threshold."""
+    toks, ex, _ = _token_index(docs, tokenization, qgrams, id_col, text_col)
     sizes = toks.select("eid", F.size("toks").alias("f"))
-    ex = toks.select("eid", F.explode("toks").alias("tok"))
     a1 = ex.select(F.col("eid").alias("id1"), "tok")
     a2 = ex.select(F.col("eid").alias("id2"), "tok")
     common = (
@@ -149,20 +156,21 @@ def _prefix_len(metric: str, threshold: float, f):
 def ejoin(docs: DataFrame, similarity_threshold: float = 0.82,
           metric: str = "cosine", tokenization: str = "qgrams",
           qgrams: int = 2, id_col: str = "doc_id", text_col: str = "text",
-          round_to: int | None = 6, prefix_filter: bool = True) -> DataFrame:
+          round_to: int | None = 6) -> DataFrame:
     """ε-join (EJoin, joins.py:350-379): all pairs with sim >= θ.
     Output canonical (id1<id2, sim).
 
-    ``prefix_filter`` (default on, exact — same output): instead of
-    joining EVERY token occurrence, each doc joins only its p rarest
-    tokens (global document-frequency order, ties by token), where p is
-    the metric's prefix bound; the full common-token count for the
-    surviving candidates is recomputed from the complete token arrays.
-    On Zipfian webtext this removes the hot-token mega-join entirely —
-    the candidate join runs on the df-ascending tail (measured 71s ->
-    ~8s at sf0.1, identical result set).
+    Prefix filter (exact — the same pairs as the exhaustive
+    :func:`_pair_sims`): instead of joining EVERY token occurrence,
+    each doc joins only its p rarest tokens (global document-frequency
+    order, ties by token), where p is the metric's prefix bound; the
+    full common-token count for the surviving candidates is recomputed
+    from the complete token arrays. On Zipfian webtext this removes the
+    hot-token mega-join entirely — the candidate join runs on the
+    df-ascending tail (measured 71s -> ~8s at sf0.1, identical result
+    set). A zero threshold prunes nothing and runs the exhaustive join.
     """
-    if not prefix_filter or similarity_threshold <= 0:
+    if similarity_threshold <= 0:
         sims = _pair_sims(docs, metric, tokenization, qgrams, id_col,
                           text_col, round_to)
         return (
@@ -171,24 +179,10 @@ def ejoin(docs: DataFrame, similarity_threshold: float = 0.82,
             .select("id1", "id2", "sim")
         )
 
-    toks = docs.select(
-        F.col(id_col).alias("eid"),
-        _join_tokens(F.col(text_col), tokenization, qgrams).alias("toks"),
-    ).localCheckpoint()  # tokenize ONCE: un-materialized, the scan +
-    # tokenize re-runs on the df-count branch, the probe side of the
-    # df join, and the verify token table below (3 corpus passes)
-    ex = toks.select("eid", F.size("toks").alias("f"),
-                     F.explode("toks").alias("tok"))
-    # global document-frequency order. NOT broadcast: real webtext
-    # vocabulary (typos, hashes, URLs) is billions of tokens — a full-df
-    # broadcast OOMs the driver. A plain shuffle join on the token key
-    # is one extra exchange and scales; AQE converts it to broadcast
-    # automatically when the vocab is genuinely small.
-    dfreq = ex.groupBy("tok").agg(F.count("*").alias("df"))
-    exr = ex.join(dfreq, "tok")
-    w = Window.partitionBy("eid").orderBy(F.col("df").asc(), F.col("tok").asc())
+    toks, _, ranked = _token_index(docs, tokenization, qgrams, id_col,
+                                   text_col)
     prefix = (
-        exr.withColumn("_rn", F.row_number().over(w))
+        ranked
         .where(F.col("_rn") <= _prefix_len(metric, similarity_threshold,
                                            F.col("f")))
         .select("eid", "tok", F.col("_rn").alias("p"), "f")
@@ -246,7 +240,7 @@ def ejoin(docs: DataFrame, similarity_threshold: float = 0.82,
                             F.col("toks").alias("_t1")), "id1")
         .join(tv.select(F.col("eid").alias("id2"),
                         F.col("toks").alias("_t2")), "id2")
-        .withColumn("c", _intersect_count("id1", "_t1", "id2", "_t2"))
+        .withColumn("c", _make_inter_udf()("id1", "_t1", "id2", "_t2"))
         .withColumn("f1", F.size("_t1")).withColumn("f2", F.size("_t2"))
     )
     sim = _sim_expr(metric, F.col("c"), F.col("f1"), F.col("f2")).cast("double")
@@ -309,23 +303,12 @@ def pe_topk_join(docs: DataFrame, k: int, metric: str = "cosine",
     enter its top-k). Only the residual entities — those whose k-th
     neighbor is genuinely weak — fall through to the exhaustive join,
     and that final join runs on the residual probe set alone."""
-    toks = docs.select(
-        F.col(id_col).alias("eid"),
-        _join_tokens(F.col(text_col), tokenization, qgrams).alias("toks"),
-    ).localCheckpoint()  # tokenize ONCE: toks feeds the df-count
-    # branch, the probe side of the df join, the residual probe set,
-    # and BOTH endpoint joins of every descent rung's verify
-    ex = toks.select("eid", F.size("toks").alias("f"),
-                     F.explode("toks").alias("tok"))
-    dfreq = ex.groupBy("tok").agg(F.count("*").alias("df"))
-    exr = ex.join(dfreq, "tok")
-    w_pref = Window.partitionBy("eid").orderBy(F.col("df").asc(),
-                                               F.col("tok").asc())
+    toks, ex, ranked = _token_index(docs, tokenization, qgrams, id_col,
+                                    text_col)
     # materialized once: every descent rung derives its prefix from
     # `ranked`, and each un-materialized reference re-runs the
-    # tokenize + df-count join + per-entity rank chain
-    ranked = exr.withColumn("_rn", F.row_number().over(w_pref)) \
-        .localCheckpoint()
+    # df-count join + per-entity rank chain
+    ranked = ranked.localCheckpoint()
 
     w_rank = Window.partitionBy("eid").orderBy(F.col("sim").desc(),
                                                F.col("neighbor").asc())
@@ -365,7 +348,7 @@ def pe_topk_join(docs: DataFrame, k: int, metric: str = "cosine",
                                   F.col("toks").alias("_ta")), "eid")
             .join(toks.select(F.col("eid").alias("neighbor"),
                               F.col("toks").alias("_tb")), "neighbor")
-            .withColumn("c", _intersect_count("eid", "_ta", "neighbor", "_tb"))
+            .withColumn("c", _make_inter_udf()("eid", "_ta", "neighbor", "_tb"))
             .withColumn("sim", _sim_expr(metric, F.col("c"),
                                          F.size("_ta"), F.size("_tb"))
                         .cast("double"))

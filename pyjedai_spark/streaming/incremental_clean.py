@@ -46,14 +46,7 @@ from pyspark.sql import functions as F
 from ..functions import analysis as A
 from ..functions import urls as U
 from ..operators import dedup as DD
-from .incremental_dedup import _band_table, _fs_exists
-
-
-def _read_prior(spark, path: str, batch_id: int) -> DataFrame | None:
-    if not _fs_exists(spark, path):
-        return None
-    df = spark.read.option("basePath", path).parquet(path)
-    return df.where(F.col("batch_id") < batch_id).drop("batch_id")
+from .incremental_dedup import _band_table, _fs_exists, _read_prior
 
 
 def _first_seen_dedup(d: DataFrame, key: str, prior: DataFrame | None):

@@ -38,9 +38,7 @@ def _band_table(docs: DataFrame, k: int, bands: int, shingle_size: int,
                 id_col: str, text_col: str) -> DataFrame:
     sigs = DD.minhash_signatures(docs, k=k, shingle_size=shingle_size,
                                  id_col=id_col, text_col=text_col)
-    b = DD.lsh_bands(sigs, bands, k // bands)
-    return b.select(
-        F.concat_ws("|", "band_idx", "band_hash").alias("key"), "eid")
+    return DD._band_keys(sigs, bands, k // bands)
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
@@ -51,6 +49,16 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
+
+
+def _read_prior(spark: SparkSession, path: str,
+                batch_id: int) -> DataFrame | None:
+    """State from strictly-earlier batches (``batch_id`` partition column
+    via parquet partition discovery); None before the first write."""
+    if not _fs_exists(spark, path):
+        return None
+    df = spark.read.option("basePath", path).parquet(path)
+    return df.where(F.col("batch_id") < batch_id).drop("batch_id")
 
 
 def process_increment(new_docs: DataFrame, state_dir: str,
@@ -75,21 +83,13 @@ def process_increment(new_docs: DataFrame, state_dir: str,
     store_path = os.path.join(state_dir, "bands")
     docs_path = docs_store_dir or os.path.join(state_dir, "docs")
 
-    def read_prior(path: str) -> DataFrame | None:
-        """State from strictly-earlier batches (batch_id partition
-        column via parquet partition discovery)."""
-        if not _fs_exists(spark, path):
-            return None
-        df = spark.read.option("basePath", path).parquet(path)
-        return df.where(F.col("batch_id") < batch_id).drop("batch_id")
-
     # candidates: (store ∪ new) x new, canonicalized — a pair is emitted
     # exactly once, in the micro-batch where its LATEST member arrived
     # (later batches have neither member in the probe side). id order is
     # NOT arrival order, so canonicalize with least/greatest rather than
     # an id-directional join.
     probe = nb.select("key", F.col("eid").alias("b"))
-    seen = read_prior(store_path)
+    seen = _read_prior(spark, store_path, batch_id)
     if seen is not None:
         base = seen.select("key", F.col("eid").alias("a")).union(
             nb.select("key", F.col("eid").alias("a")))
@@ -104,7 +104,7 @@ def process_increment(new_docs: DataFrame, state_dir: str,
     )
 
     # verify against full shingle sets: old docs read from the doc store
-    prior_docs = read_prior(docs_path)
+    prior_docs = _read_prior(spark, docs_path, batch_id)
     if prior_docs is not None:
         all_docs = prior_docs.select(id_col, text_col).unionByName(
             new_docs.select(id_col, text_col))

@@ -1,8 +1,8 @@
 """Stage-level probe of ejoin_cosine_zipf (bench Zipf corpus, sf0.1 size).
 
-Replicates joins.ejoin's prefix-filter body with timers around each
-localCheckpoint barrier + the final verify, and optionally swaps the
-verify's array_intersect for the Arrow kernel (PROBE_VERIFY=arrow).
+Replicates joins.ejoin's prefix-filter body (without the positional
+bound) with timers around each localCheckpoint barrier + the final
+verify, which runs the library's Arrow intersect kernel.
 """
 import os, sys, time
 
@@ -11,8 +11,9 @@ from pyjedai_spark.session import get_spark  # noqa: E402
 
 t_all = time.perf_counter()
 spark = get_spark()
-from pyspark.sql import functions as F, Window  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 from pyjedai_spark.operators import joins as J  # noqa: E402
+from pyjedai_spark.operators.dedup import _make_inter_udf  # noqa: E402
 from pyjedai_spark.synth import webtext_df  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -23,17 +24,11 @@ print(f"setup {time.perf_counter()-t_all:.2f}s  n_docs={n_docs}")
 
 metric, threshold = "cosine", 0.82
 REPS = int(os.environ.get("PROBE_REPS", "3"))
-VERIFY = os.environ.get("PROBE_VERIFY", "expr")
 
 for rep in range(REPS):
     t0 = time.perf_counter()
-    toks = docs.select(F.col("eid"), J._join_tokens(F.col("text"), "standard", 2).alias("toks"))
-    ex = toks.select("eid", F.size("toks").alias("f"), F.explode("toks").alias("tok"))
-    dfreq = ex.groupBy("tok").agg(F.count("*").alias("df"))
-    exr = ex.join(dfreq, "tok")
-    w = Window.partitionBy("eid").orderBy(F.col("df").asc(), F.col("tok").asc())
-    prefix = (exr.withColumn("_rn", F.row_number().over(w))
-              .where(F.col("_rn") <= J._prefix_len(metric, threshold, F.col("f")))
+    toks, _, ranked = J._token_index(docs, "standard", 2, "eid", "text")
+    prefix = (ranked.where(F.col("_rn") <= J._prefix_len(metric, threshold, F.col("f")))
               .select("eid", "tok").localCheckpoint())
     t1 = time.perf_counter()
     cand = (prefix.alias("a").join(prefix.alias("b"), "tok")
@@ -47,12 +42,7 @@ for rep in range(REPS):
     t3 = time.perf_counter()
     j = (cand.join(tv.select(F.col("eid").alias("id1"), F.col("toks").alias("_t1")), "id1")
          .join(tv.select(F.col("eid").alias("id2"), F.col("toks").alias("_t2")), "id2"))
-    if VERIFY == "arrow":
-        from pyjedai_spark.operators.dedup import _make_inter_udf
-        c = _make_inter_udf()("id1", "_t1", "id2", "_t2")
-    else:
-        c = F.size(F.array_intersect("_t1", "_t2"))
-    j = (j.withColumn("c", c)
+    j = (j.withColumn("c", _make_inter_udf()("id1", "_t1", "id2", "_t2"))
          .withColumn("f1", F.size("_t1")).withColumn("f2", F.size("_t2")))
     sim = F.round(J._sim_expr(metric, F.col("c"), F.col("f1"), F.col("f2")).cast("double"), 6)
     out = (j.withColumn("sim", sim).where(F.col("sim") >= threshold)
@@ -62,5 +52,5 @@ for rep in range(REPS):
     ncand = cand.count()
     nout = out.count()
     print(f"rep{rep} prefix={t1-t0:.2f} cand={t2-t1:.2f} tv={t3-t2:.2f} "
-          f"verify={t4-t3:.2f} total={t4-t0:.2f} ncand={ncand} nout={nout} verify_impl={VERIFY}")
+          f"verify={t4-t3:.2f} total={t4-t0:.2f} ncand={ncand} nout={nout}")
 spark.stop()

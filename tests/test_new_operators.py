@@ -612,17 +612,95 @@ def test_corpus_clean_tiered_all_tied_equals_default(spark):
     assert tiered == default
 
 
+# Pure-column references for the Arrow kernels of operators/dedup.py:
+# no pandas UDF anywhere, the same portable arithmetic the DuckDB
+# oracles reproduce (md5 hex prefix -> u32 token hash, affine MinHash
+# mod P, SimHash bit majority, array_intersect overlap).
+
+def _ref_token_hashes(toks):
+    """array<string> -> array<long>: first 8 hex chars of md5 per token."""
+    return F.transform(
+        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
+
+
+def _ref_dedup_tokens(text, shingle_size):
+    """The token (or token-shingle) set the dedup kernels hash."""
+    if shingle_size > 1:
+        return F.array_distinct(
+            T.word_shingles(T.tokens(text, distinct=False), shingle_size))
+    return T.tokens(text)
+
+
+def _ref_minhash_signatures(docs, k=32, shingle_size=1):
+    """All k permutation minima in one fold over the token-hash array;
+    the [P]*k zero value is the empty-doc sentinel, NULL text folds to
+    NULL."""
+    from pyjedai_spark.operators import dedup as DD
+
+    coeffs = F.array(*[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+                       for a, b in DD.minhash_coeffs(k)])
+    zero = F.array(*[F.lit(DD.P)] * k).cast("array<long>")
+    sig = F.aggregate(
+        _ref_token_hashes(_ref_dedup_tokens(F.col("text"), shingle_size)),
+        zero,
+        lambda acc, h: F.zip_with(
+            acc, coeffs,
+            lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(DD.P))),
+    )
+    return docs.select(F.col("doc_id").alias("eid"), sig.alias("sig"))
+
+
+def _ref_jaccard_verify(pairs, docs, threshold, shingle_size):
+    """Exact Jaccard of the candidate pairs with array_intersect."""
+    t = docs.select(F.col("doc_id").alias("_id"),
+                    _ref_dedup_tokens(F.col("text"), shingle_size).alias("_t"))
+    j = (pairs.join(t.select(F.col("_id").alias("id1"),
+                             F.col("_t").alias("_t1")), "id1")
+         .join(t.select(F.col("_id").alias("id2"),
+                        F.col("_t").alias("_t2")), "id2"))
+    inter = F.size(F.array_intersect("_t1", "_t2")).cast("double")
+    union = F.size("_t1") + F.size("_t2") - inter
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (j.withColumn("jaccard", F.round(jac, 6))
+            .where(F.col("jaccard") >= threshold)
+            .select("id1", "id2", "jaccard"))
+
+
+def _ref_simhash_signatures(docs, id_col="doc_id", text_col="text"):
+    """32 conditional sums over the exploded token hashes; docs with
+    NULL/empty token arrays vanish in the explode."""
+    ex = docs.select(F.col(id_col).alias("eid"), F.explode(
+        _ref_token_hashes(T.tokens(F.col(text_col)))).alias("h"))
+    sums = ex.groupBy("eid").agg(*[
+        F.sum(F.shiftright("h", j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{j}")
+        for j in range(32)])
+    sig = sum(F.when(F.col(f"b{j}") > 0, F.lit(1 << j).cast("long"))
+              .otherwise(F.lit(0).cast("long")) for j in range(32))
+    return sums.select("eid", sig.alias("simhash"))
+
+
+def _brute_ejoin(docs, threshold, metric, tokenization):
+    """The ε-join from the exhaustive token join (no prefix filter, no
+    verify kernel)."""
+    from pyjedai_spark.operators import joins as J
+
+    sims = J._pair_sims(docs, metric, tokenization, 2, "doc_id", "text", 6)
+    return sorted(map(tuple, sims.where(
+        (F.col("sim") >= threshold) & (F.col("id1") < F.col("id2")))
+        .select("id1", "id2", "sim").collect()))
+
+
 def test_minhash_arrow_expr_bit_identical(spark, docs):
-    """The vectorized Arrow signature kernel (r5 scaling fix) must be
-    bit-identical to the expression fold on both token and shingle
-    paths — the DuckDB minhash oracles reproduce the EXPRESSION
-    arithmetic, so any drift here breaks the oracle gate."""
+    """The Arrow signature kernel must be bit-identical to the
+    pure-column fold on both token and shingle paths — the DuckDB
+    minhash oracles reproduce the same arithmetic, so any drift here
+    breaks the oracle gate."""
     from pyjedai_spark.operators import dedup as DD
 
     for shingle in (1, 3):
-        e = DD.minhash_signatures(docs, shingle_size=shingle, impl="expr") \
+        e = _ref_minhash_signatures(docs, shingle_size=shingle) \
             .withColumnRenamed("sig", "sig_e")
-        a = DD.minhash_signatures(docs, shingle_size=shingle, impl="arrow") \
+        a = DD.minhash_signatures(docs, shingle_size=shingle) \
             .withColumnRenamed("sig", "sig_a")
         j = e.join(a, "eid")
         assert j.count() == docs.count()
@@ -630,38 +708,37 @@ def test_minhash_arrow_expr_bit_identical(spark, docs):
 
 
 def test_minhash_arrow_null_text_matches_expr(spark):
-    """NULL-text docs must get a NULL signature in BOTH impls (the
-    expression fold and the DuckDB oracles propagate NULL; the arrow
-    kernel used to emit the [P]*k empty-doc sentinel instead — r5
-    ADVICE medium)."""
+    """NULL-text docs get a NULL signature, as in the column reference
+    and the DuckDB oracles (the kernel used to emit the [P]*k empty-doc
+    sentinel instead — r5 ADVICE medium)."""
     from pyjedai_spark.operators import dedup as DD
 
     df = spark.createDataFrame([(1, None), (2, ""), (3, "real text")],
                                "doc_id long, text string")
     for shingle in (1, 3):
-        e = {r["eid"]: r["sig"] for r in DD.minhash_signatures(
-            df, shingle_size=shingle, impl="expr").collect()}
+        e = {r["eid"]: r["sig"] for r in _ref_minhash_signatures(
+            df, shingle_size=shingle).collect()}
         a = {r["eid"]: r["sig"] for r in DD.minhash_signatures(
-            df, shingle_size=shingle, impl="arrow").collect()}
+            df, shingle_size=shingle).collect()}
         assert e == a
         assert a[1] is None
 
 
 def test_jaccard_verify_arrow_expr_identical(spark, docs):
-    """The vectorized verify kernel (r6 scaling fix) must be
-    bit-identical to the array_intersect expression path — the DuckDB
-    near-dup oracles reproduce the expression arithmetic. Covers both
-    the shingle (production) and unit-token paths, plus NULL text."""
+    """jaccard_verify (Arrow intersect kernel) must be bit-identical to
+    the array_intersect column reference — the DuckDB near-dup oracles
+    reproduce that arithmetic. Covers both the shingle (production) and
+    unit-token paths, plus NULL text."""
     from pyjedai_spark.operators import dedup as DD
 
     sample = docs.limit(200)
     for shingle in (1, 3):
         cands = DD.lsh_candidate_pairs(sample, k=32, bands=8,
                                        shingle_size=shingle, max_bucket=None)
-        e = sorted(map(tuple, DD.jaccard_verify(
-            cands, sample, 0.2, shingle, impl="expr").collect()))
+        e = sorted(map(tuple, _ref_jaccard_verify(
+            cands, sample, 0.2, shingle).collect()))
         a = sorted(map(tuple, DD.jaccard_verify(
-            cands, sample, 0.2, shingle, impl="arrow").collect()))
+            cands, sample, 0.2, shingle).collect()))
         assert e == a and len(e) > 0
 
     nulls = spark.createDataFrame(
@@ -669,10 +746,8 @@ def test_jaccard_verify_arrow_expr_identical(spark, docs):
         "doc_id long, text string")
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (3, 4)], "id1 long, id2 long")
-    e = sorted(map(tuple, DD.jaccard_verify(
-        pairs, nulls, 0.1, 1, impl="expr").collect()))
-    a = sorted(map(tuple, DD.jaccard_verify(
-        pairs, nulls, 0.1, 1, impl="arrow").collect()))
+    e = sorted(map(tuple, _ref_jaccard_verify(pairs, nulls, 0.1, 1).collect()))
+    a = sorted(map(tuple, DD.jaccard_verify(pairs, nulls, 0.1, 1).collect()))
     assert e == a == [(1, 2, 1.0)]
 
 
@@ -684,7 +759,7 @@ def test_minhash_arrow_empty_doc_sentinel(spark):
     df = spark.createDataFrame([(1, ""), (2, "   "), (3, "real text")],
                                "doc_id long, text string")
     rows = {r["eid"]: r["sig"]
-            for r in DD.minhash_signatures(df, impl="arrow").collect()}
+            for r in DD.minhash_signatures(df).collect()}
     assert rows[1] == [DD.P] * 32 and rows[2] == [DD.P] * 32
     assert rows[3] != [DD.P] * 32
 
@@ -704,9 +779,8 @@ def test_ejoin_prefix_positional_parity(spark, docs):
         ("dice", "standard_multiset", 0.6), ("dice", "qgrams", 0.35),
     ]:
         fast = sorted(map(tuple, J.ejoin(
-            sample, thr, metric, tokenization, prefix_filter=True).collect()))
-        slow = sorted(map(tuple, J.ejoin(
-            sample, thr, metric, tokenization, prefix_filter=False).collect()))
+            sample, thr, metric, tokenization).collect()))
+        slow = _brute_ejoin(sample, thr, metric, tokenization)
         assert fast == slow, (metric, tokenization, thr,
                               len(fast), len(slow))
 
@@ -733,12 +807,12 @@ def test_pe_topk_brute_force_parity(spark, docs):
     assert out == brute and len(out) > 0
 
 
-def test_simhash_arrow_expr_identical(spark, docs):
-    """The vectorized SimHash kernel (r6: one scan, zero shuffle) must
-    be bit-identical to the 32-conditional-sum aggregate path — the
-    DuckDB simhash oracles reproduce the aggregate arithmetic. NULL and
-    empty-token docs must be ABSENT from both (explode/unnest drops
-    them; the kernel path filters its NULL signatures)."""
+def test_simhash_arrow_expr_identical(spark, docs, monkeypatch):
+    """The SimHash kernel (one scan, zero shuffle) must be bit-identical
+    to the 32-conditional-sum column reference — the DuckDB simhash
+    oracles reproduce that arithmetic. NULL and empty-token docs must
+    be ABSENT from both. Candidate pairs must not change when the
+    reference signatures are swapped in."""
     from pyjedai_spark.operators import dedup as DD
 
     extra = spark.createDataFrame(
@@ -746,42 +820,45 @@ def test_simhash_arrow_expr_identical(spark, docs):
         "doc_id long, text string")
     df = docs.select("doc_id", "text").unionByName(extra)
     e = {r["eid"]: r["simhash"]
-         for r in DD.simhash_signatures(df, impl="expr").collect()}
+         for r in _ref_simhash_signatures(df).collect()}
     a = {r["eid"]: r["simhash"]
-         for r in DD.simhash_signatures(df, impl="arrow").collect()}
+         for r in DD.simhash_signatures(df).collect()}
     assert e == a and len(e) > 0
     assert 9001 not in a and 9002 not in a and 9003 not in a
     assert 9004 in a
 
+    pa = sorted(map(tuple, DD.simhash_candidate_pairs(df).collect()))
+    monkeypatch.setattr(DD, "simhash_signatures", _ref_simhash_signatures)
     pe = sorted(map(tuple, DD.simhash_candidate_pairs(df).collect()))
-    import os
-    os.environ["PYJEDAI_SIMHASH_IMPL"] = "expr"
-    try:
-        pa = sorted(map(tuple, DD.simhash_candidate_pairs(df).collect()))
-    finally:
-        del os.environ["PYJEDAI_SIMHASH_IMPL"]
     assert pe == pa
 
 
-def test_ejoin_arrow_expr_identical(spark, docs, monkeypatch):
-    """The join verify stages share the dedup Arrow intersect kernel
-    (r6): ejoin's prefix-path verify and pe_topk_join's per-rung verify
-    must be bit-identical to the array_intersect expression form the
-    DuckDB join oracles reproduce — across metrics and tokenizations
-    (set and occurrence-suffixed multiset)."""
+def test_ejoin_arrow_expr_identical(spark, docs):
+    """The join verify stages run the dedup Arrow intersect kernel:
+    ejoin's prefix-path verify and pe_topk_join's per-rung verify must
+    equal the exhaustive token-join count of ``_pair_sims`` — across
+    metrics and tokenizations (set and occurrence-suffixed multiset)."""
+    from pyspark.sql import Window
+
     from pyjedai_spark.operators import joins as J
 
     sample = docs.limit(150)
-    for impl_env, bag in (("expr", {}), ("arrow", {})):
-        monkeypatch.setenv("PYJEDAI_VERIFY_IMPL", impl_env)
-        bag["ej"] = sorted(map(tuple, J.ejoin(
-            sample, 0.6, "cosine", "qgrams").collect()))
-        bag["ejm"] = sorted(map(tuple, J.ejoin(
-            sample, 0.5, "dice", "standard_multiset").collect()))
-        bag["pk"] = sorted(map(tuple, J.pe_topk_join(
-            sample.limit(60), 3, "jaccard", "standard").collect()))
-        if impl_env == "expr":
-            expr_bag = dict(bag)
-    assert expr_bag["ej"] == bag["ej"] and len(bag["ej"]) > 0
-    assert expr_bag["ejm"] == bag["ejm"] and len(bag["ejm"]) > 0
-    assert expr_bag["pk"] == bag["pk"] and len(bag["pk"]) > 0
+    ej = sorted(map(tuple, J.ejoin(sample, 0.6, "cosine", "qgrams").collect()))
+    assert ej == _brute_ejoin(sample, 0.6, "cosine", "qgrams") and len(ej) > 0
+    ejm = sorted(map(tuple, J.ejoin(
+        sample, 0.5, "dice", "standard_multiset").collect()))
+    assert ejm == _brute_ejoin(sample, 0.5, "dice", "standard_multiset") \
+        and len(ejm) > 0
+
+    small = sample.limit(60)
+    pk = sorted(map(tuple, J.pe_topk_join(
+        small, 3, "jaccard", "standard").collect()))
+    sims = J._pair_sims(small, "jaccard", "standard", 2, "doc_id", "text", 6)
+    w = Window.partitionBy("id1").orderBy(F.col("sim").desc(),
+                                          F.col("id2").asc())
+    brute = sorted(map(tuple, (
+        sims.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 3)
+        .select(F.col("id1").alias("eid"), F.col("id2").alias("neighbor"),
+                "sim", "rank")).collect()))
+    assert pk == brute and len(pk) > 0
