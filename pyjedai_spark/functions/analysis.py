@@ -9,7 +9,7 @@ the LLM-corpus use-case the graft targets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import text as T
@@ -104,15 +104,20 @@ def language_id(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _fingerprint(text_col: str) -> Column:
+    """md5 of whitespace-normalized lowercase text. NULL text hashes as
+    empty text (md5(NULL) would be NULL, which never joins against a
+    prior fingerprint store or another fingerprint)."""
+    base = F.coalesce(F.col(text_col), F.lit(""))
+    return F.md5(F.lower(F.regexp_replace(base, r"\s+", " ")))
+
+
 def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
-    """(eid, fingerprint): md5 of whitespace-normalized lowercase text —
-    the exact-dedup / lineage fingerprint. NULL text hashes as empty
-    text (md5(NULL) would be NULL, which never joins against a prior
-    fingerprint store — so streaming and batch must both coalesce)."""
-    base = F.coalesce(F.col(text_col), F.lit(""))
-    norm = F.lower(F.regexp_replace(base, r"\s+", " "))
-    return docs.select(F.col(id_col).alias("eid"), F.md5(norm).alias("fingerprint"))
+    """(eid, fingerprint): the exact-dedup / lineage fingerprint
+    (:func:`_fingerprint`), shared by batch and streaming cleaning."""
+    return docs.select(F.col(id_col).alias("eid"),
+                       _fingerprint(text_col).alias("fingerprint"))
 
 
 def line_dedup(docs: DataFrame, id_col: str = "doc_id",
@@ -190,10 +195,9 @@ def source_stats(docs: DataFrame, id_col: str = "doc_id",
     pipeline uses to blocklist boilerplate-heavy domains: doc count,
     exact-duplicate fraction (corpus-wide fingerprint), mean doc
     length. Two aggregations, both map-side combining."""
-    fp = F.md5(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     d = docs.select(F.col(source_col).alias("source"),
                     F.col(id_col).alias("eid"),
-                    fp.alias("fingerprint"),
+                    _fingerprint(text_col).alias("fingerprint"),
                     F.length(text_col).alias("_len"))
     counts = d.groupBy("fingerprint").agg(F.count("*").alias("_fc"))
     return (

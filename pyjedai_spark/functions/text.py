@@ -192,11 +192,13 @@ def token_qgram_combo_keys(tokens_col, q: int = 6, threshold: float = 0.95,
     default): there floor(L*t) = L-1 for all L in 2..15, so the key set
     is exactly {full concatenation} ∪ {drop-one concatenations} —
     generated with slice/array_join, no UDF. Lower thresholds are
-    combinatorial; use the pandas-UDF fallback in block_building.
+    combinatorial: ``block_building.extended_qgrams_blocking`` routes
+    them to its pandas-UDF key builder.
     """
     if threshold < 14.0 / 15.0:
         raise ValueError("column-expression path needs threshold >= 14/15; "
-                         "use extended_qgrams_blocking(udf_fallback=True)")
+                         "extended_qgrams_blocking(threshold=...) handles "
+                         "lower thresholds")
     t_ = _col(tokens_col)
 
     def per_token(tok):

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .survivors import _best_members
+
 # RFC-3986-ish splitter, shared Java/RE2 syntax.
 _URL_RE = (r"^(?:([a-zA-Z][a-zA-Z0-9+.-]*)://)?"  # 1 scheme
            r"([^/?#]*)"                            # 2 authority
@@ -46,6 +48,16 @@ def canonical_url(col) -> Column:
         F.when(qs != "", F.concat(F.lit("?"), qs)).otherwise(F.lit("")))
 
 
+def _url_key(url_col, id_col) -> Column:
+    """Group key of URL dedup: the canonical URL, or for a NULL url a
+    per-doc sentinel (a NUL byte, ``null:``, then the eid; NUL cannot
+    appear in a canonicalized URL), so null-url docs stay their own
+    singletons instead of vanishing from a join on a NULL key or
+    grouping together as one bogus duplicate group."""
+    return F.coalesce(canonical_url(url_col),
+                      F.concat(F.lit("\x00null:"), F.col(id_col).cast("string")))
+
+
 def url_dedup(docs: DataFrame, id_col: str = "doc_id",
               url_col: str = "url", ranks: DataFrame | None = None,
               rank_col: str = "rank") -> DataFrame:
@@ -55,34 +67,21 @@ def url_dedup(docs: DataFrame, id_col: str = "doc_id",
     sensitivity beyond the aggregate's own map-side combine.
 
     A NULL url (common in real crawl data) gets a per-doc sentinel key
-    ("\\x00null:<eid>" — '\\x00' cannot appear in a canonicalized URL),
-    so null-url docs survive as their own singletons instead of
-    vanishing from the inner join on a NULL key; ``url_canon`` is
-    reported as NULL for them.
+    (:func:`_url_key`), so null-url docs survive as their own
+    singletons; ``url_canon`` is reported as NULL for them.
 
     ``ranks`` (optional, (id_col, rank_col) numeric): tiered survivor
     policy — the survivor becomes the HIGHEST-ranked member of each
     URL group (quality score, source-tier priority); ties and
-    unranked/NULL-ranked members sort last and break to min id, so it
-    degrades to the min-id default when every rank ties. Same
-    map-side-combining aggregate shape (max(struct) instead of min)."""
-    canon = canonical_url(url_col)
-    key = F.coalesce(canon,
-                     F.concat(F.lit("\x00null:"), F.col(id_col).cast("string")))
-    d = docs.select(F.col(id_col).alias("eid"), key.alias("_key"),
-                    canon.alias("url_canon"))
-    if ranks is None:
-        survivors = d.groupBy("_key").agg(F.min("eid").alias("survivor"))
-    else:
-        r = ranks.select(F.col(id_col).alias("eid"),
-                         F.col(rank_col).cast("double").alias("_rank"))
-        survivors = (
-            d.join(r, "eid", "left").groupBy("_key")
-            .agg(F.max(F.struct(
-                F.coalesce("_rank", F.lit(float("-inf"))).alias("k"),
-                (-F.col("eid")).alias("ni"),
-                F.col("eid").alias("best"))).alias("_b"))
-            .select("_key", F.col("_b.best").alias("survivor")))
+    unranked/NULL/NaN-ranked members sort last and break to min id, so
+    it degrades to the min-id default when every rank ties. The rule is
+    the shared min-struct aggregate of
+    :func:`~pyjedai_spark.functions.survivors._best_members`, so ids of
+    any orderable type work."""
+    d = docs.select(F.col(id_col).alias("eid"),
+                    _url_key(url_col, id_col).alias("_key"),
+                    canonical_url(url_col).alias("url_canon"))
+    survivors = _best_members(d, "_key", ranks, id_col, rank_col)
     return d.join(survivors, "_key").select(
         "eid", "url_canon", "survivor",
         (F.col("eid") != F.col("survivor")).cast("long").alias("is_dup"))

@@ -88,42 +88,19 @@ def extended_suffix_arrays_blocking(docs: DataFrame, suffix_length: int = 6,
     return keep_multi_entity_blocks(p, 2, max_block_size)
 
 
-def extended_qgrams_blocking(docs: DataFrame, q: int = 6,
-                             threshold: float = 0.95,
-                             id_col: str = "doc_id", text_col: str = "text",
-                             max_block_size: int | None = None,
-                             udf_fallback: bool = False) -> DataFrame:
-    """Key = ordered q-gram combination of size >= max(1, floor(L*t))
-    (ExtendedQGramsBlocking, block_building.py:692-788, MAX_QGRAMS=15).
-
-    Default path is pure column expressions (valid for t >= 14/15, where
-    the combination set is {full, drop-one}); ``udf_fallback`` switches
-    to an Arrow pandas UDF with the reference's recursive generator for
-    arbitrary thresholds.
-    """
-    if not udf_fallback and threshold >= 14.0 / 15.0:
-        keys = T.token_qgram_combo_keys(T.tokens(text_col), q, threshold)
-        p = _postings(docs, keys, id_col)
-        return keep_multi_entity_blocks(p, 2, max_block_size)
-
+def _udf_qgram_combo_keys(text_col: str, q: int, threshold: float):
+    """ExtendedQGrams keys for ANY threshold: an Arrow pandas UDF with
+    the reference's ordered-combination generator — the only path for
+    t < 14/15, and the reference the column-expression path is tested
+    against."""
     import math
+    from itertools import combinations
 
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
     def _keys(texts: pd.Series) -> pd.Series:
         import re
-
-        def combos(grams: list[str], size: int) -> list[str]:
-            # ordered combinations, concatenated (block_building.py:754-773)
-            if size == 0 or len(grams) < size:
-                return []
-            out = []
-            from itertools import combinations
-
-            for c in combinations(range(len(grams)), size):
-                out.append("".join(grams[i] for i in c))
-            return out
 
         def per_doc(s: str) -> list[str]:
             keys: set[str] = set()
@@ -137,14 +114,37 @@ def extended_qgrams_blocking(docs: DataFrame, q: int = 6,
                     continue
                 grams = grams[:15]
                 lo = max(1, math.floor(len(grams) * threshold))
+                # ordered combinations, concatenated
+                # (block_building.py:754-773)
                 for size in range(lo, len(grams) + 1):
-                    keys.update(combos(grams, size))
+                    keys.update("".join(grams[i] for i in c)
+                                for c in combinations(range(len(grams)),
+                                                      size))
             return sorted(keys)
 
         return texts.map(per_doc)
 
-    p = _postings(docs, _keys(F.col(text_col)), id_col)
-    return keep_multi_entity_blocks(p, 2, max_block_size)
+    return _keys(F.col(text_col))
+
+
+def extended_qgrams_blocking(docs: DataFrame, q: int = 6,
+                             threshold: float = 0.95,
+                             id_col: str = "doc_id", text_col: str = "text",
+                             max_block_size: int | None = None) -> DataFrame:
+    """Key = ordered q-gram combination of size >= max(1, floor(L*t))
+    (ExtendedQGramsBlocking, block_building.py:692-788, MAX_QGRAMS=15).
+
+    The threshold picks the key builder: for t >= 14/15 (the 0.95
+    default), where the combination set is {full, drop-one}, pure column
+    expressions; below it, the pandas-UDF generator
+    :func:`_udf_qgram_combo_keys`.
+    """
+    if threshold >= 14.0 / 15.0:
+        keys = T.token_qgram_combo_keys(T.tokens(text_col), q, threshold)
+    else:
+        keys = _udf_qgram_combo_keys(text_col, q, threshold)
+    return keep_multi_entity_blocks(_postings(docs, keys, id_col), 2,
+                                    max_block_size)
 
 
 def block_pairs(postings: DataFrame, salt_threshold: int | None = None) -> DataFrame:

@@ -151,25 +151,21 @@ def _filter_with_cards(p: DataFrame, ratio: float, dirty: bool,
 
 def clean_blocks(postings: DataFrame, smoothing_factor: float = 1.025,
                  ratio: float = 0.8, dirty: bool = True,
-                 materialize: bool = True, keep_size: bool = False) -> DataFrame:
+                 keep_size: bool = False) -> DataFrame:
     """BlockPurging + BlockFiltering fused: output-identical to
-    ``block_filtering(block_purging(p, s), r)``, but the tokenized
-    postings materialize ONCE and the block-cardinality aggregate runs
-    ONCE (purging drops whole blocks, so a surviving block's cardinality
-    is unchanged — the original cardinality frame serves the threshold
-    scan, the purge filter, AND the filtering ranks).
+    ``block_filtering(block_purging(p, s), r)``, but the block-cardinality
+    aggregate runs ONCE (purging drops whole blocks, so a surviving
+    block's cardinality is unchanged — the original cardinality frame
+    serves the threshold scan, the purge filter, AND the filtering ranks).
 
     The naive composition computes block cardinalities three times
-    (threshold collect, the purge semi-join's build side, filtering) and
-    tokenizes the corpus twice (threshold collect + the downstream
-    materialization) — at 100 TB that is two full extra passes over the
-    corpus. Pass ``materialize=False`` when ``postings`` is already a
-    checkpoint/materialized stage boundary.
+    (threshold collect, the purge semi-join's build side, filtering).
+    ``postings`` is read twice (the cardinality aggregate and the purge
+    join), so pass a materialized stage boundary (a checkpoint or
+    ``localCheckpoint()``), or the corpus is tokenized twice.
     """
-    if materialize:
-        postings = postings.localCheckpoint()
-    # one groupBy over materialized postings, materialized because it
-    # feeds both the level collect and the purge+filter join below
+    # one groupBy over the postings, materialized because it feeds both
+    # the level collect and the purge+filter join below
     cards = block_cardinalities(postings, dirty).localCheckpoint()
     thr = _scan_threshold(cards, smoothing_factor)
     kept_cards = cards.where(F.col("cardinality") <= F.lit(thr)).select(

@@ -29,7 +29,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import analysis as A
 from ..functions import text as T
+from ..functions.survivors import _best_members
 from .block_building import keep_multi_entity_blocks
 
 P = T.MERSENNE_PRIME_ISH  # 4294967311, prime > 2^32
@@ -65,57 +67,34 @@ def minhash_coeffs(k: int) -> list[tuple[int, int]]:
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text", normalize: bool = True,
-                ranks: DataFrame | None = None,
+                text_col: str = "text", ranks: DataFrame | None = None,
                 rank_col: str = "rank") -> DataFrame:
     """Exact duplicate groups by content hash: (eid, fingerprint,
-    group_size, is_duplicate, keep). ``keep`` marks the minimum id of
-    each group — the canonical survivor a training pipeline retains.
+    group_size, is_duplicate, keep). The fingerprint is
+    :func:`~pyjedai_spark.functions.analysis.doc_fingerprint` (NULL text
+    hashes like empty text, so all-missing docs are one exact group, not
+    silently dropped). ``keep`` marks the minimum id of each group — the
+    canonical survivor a training pipeline retains.
 
     ``ranks`` (optional, (id_col, rank_col) numeric): tiered survivor
     policy — ``keep`` marks the HIGHEST-ranked member instead (ties and
-    unranked members sort last, break to min id); degrades to min-id
+    unranked/NaN members sort last, break to min id); degrades to min-id
     when every rank ties. For exact groups the texts are identical, so
     the ranking is only meaningful when it carries doc-level signal
-    beyond the text (source tier, recency, url quality)."""
-    # NULL text hashes like empty text (all-missing docs are one exact
-    # group, not silently dropped — real crawl data has null fields)
-    base = F.coalesce(F.col(text_col), F.lit(""))
-    norm = F.lower(F.regexp_replace(base, r"\s+", " ")) if normalize else base
-    h = docs.select(F.col(id_col).alias("eid"), F.md5(norm).alias("fingerprint"))
-    # groupBy + join-back, NOT Window.partitionBy(fingerprint): the
-    # aggregate gets a map-side partial combine, so a 10^9-copy
-    # boilerplate fingerprint reduces to one (fingerprint, count, min)
-    # row per map task instead of funneling every copy through a single
-    # window task. Same pattern as functions/urls.py:url_dedup.
-    if ranks is None:
-        groups = h.groupBy("fingerprint").agg(
-            F.count("*").alias("group_size"), F.min("eid").alias("_keep_eid"))
-    else:
-        # dedupe ranks to one row per eid BEFORE the join: a duplicate
-        # id in ranks would otherwise multiply its doc's h row and
-        # inflate group_size (flipping is_duplicate for singletons)
-        r = (ranks.select(F.col(id_col).alias("eid"),
-                          F.col(rank_col).cast("double").alias("_rank"))
-             .groupBy("eid").agg(F.max("_rank").alias("_rank")))
-        # min(struct(-rank, eid)): highest rank wins, ties (and
-        # unranked, -(-inf) = +inf sorts last) break to MIN eid —
-        # id-type-generic, unlike max(struct(rank, -eid)) which needs
-        # a negatable (numeric) id
-        nk = -F.coalesce(F.col("_rank"), F.lit(float("-inf")))
-        groups = (
-            h.join(r, "eid", "left").groupBy("fingerprint")
-            .agg(F.count("*").alias("group_size"),
-                 F.min(F.struct(
-                     nk.alias("nk"),
-                     F.col("eid").alias("best"))).alias("_b"))
-            .select("fingerprint", "group_size",
-                    F.col("_b.best").alias("_keep_eid")))
+    beyond the text (source tier, recency, url quality).
+
+    Plan: the survivor rule's single groupBy(fingerprint) (map-side
+    partial combine, ``group_size`` counted in the same aggregate), then
+    a join back — never a Window.partitionBy(fingerprint), which would
+    funnel every copy of a boilerplate page through one task."""
+    h = A.doc_fingerprint(docs, id_col, text_col)
+    groups = _best_members(h, "fingerprint", ranks, id_col, rank_col,
+                           aggs=(F.count("*").alias("group_size"),))
     return h.join(groups, "fingerprint").select(
         "eid", "fingerprint",
         F.col("group_size"),
         (F.col("group_size") > 1).cast("int").alias("is_duplicate"),
-        (F.col("eid") == F.col("_keep_eid")).cast("int").alias("keep"),
+        (F.col("eid") == F.col("survivor")).cast("int").alias("keep"),
     )
 
 
@@ -636,8 +615,8 @@ def cluster_survivors(members: DataFrame, ranks: DataFrame,
     ``ranks``: (id_col, rank_col) numeric ranking — quality score,
     source-tier priority (curated > crawl), recency, length. The
     survivor is the best-ranked member (highest when ``descending``,
-    lowest otherwise); ties and unranked members (rank NULL, or id
-    missing from ``ranks`` — both sort last) break to the minimum id,
+    lowest otherwise); ties and unranked members (rank NULL or NaN, or
+    id missing from ``ranks`` — all sort last) break to the minimum id,
     so output is deterministic and degrades to the min-id policy when
     every rank ties. Returns (eid, cluster_id, survivor, is_survivor).
 
@@ -647,35 +626,16 @@ def cluster_survivors(members: DataFrame, ranks: DataFrame,
     ``exact_dedup``/``minhash_dedup_pipeline``/``corpus_clean_pipeline``
     output by feeding their cluster columns in as ``members``.
 
-    Scale: groupBy(cluster).agg(min(struct(-rank_key, id))) is a
-    map-side-combining aggregate (one row per cluster per map task —
-    a 10^8-member boilerplate cluster never funnels through one window
-    task), then one hash-join back on the cluster key; both shuffles
-    are on the cluster key only. Ids may be any orderable type (string
-    urls included): min-struct needs no negated-id tie-break, and the
-    ids are never cast.
+    Scale: the survivor rule shared with ``exact_dedup`` and
+    ``url_dedup`` (:func:`~pyjedai_spark.functions.survivors._best_members`)
+    — one map-side-combining groupBy(cluster), then one hash-join back
+    on the cluster key. Ids may be any orderable type (string urls
+    included); they are never cast.
     """
     m = members.select(F.col(id_col).alias("eid"),
                        F.col(cluster_col).alias("cluster_id"))
-    # one rank per id (a duplicated ranks row must not duplicate the
-    # member row through the join): best rank per eid wins
-    r = (ranks.select(F.col(id_col).alias("eid"),
-                      F.col(rank_col).cast("double").alias("_rank"))
-         .groupBy("eid")
-         .agg((F.max("_rank") if descending else F.min("_rank"))
-              .alias("_rank")))
-    j = m.join(r, "eid", "left")
-    key = F.col("_rank") if descending else -F.col("_rank")
-    # negate so MIN-struct picks the best rank; unranked -(-inf) = +inf
-    # sorts last; the struct's second field gives the min-id tie-break
-    nk = -F.coalesce(key, F.lit(float("-inf")))
-    best = j.groupBy("cluster_id").agg(
-        F.min(F.struct(nk.alias("nk"),
-                       F.col("eid").alias("best_eid"))).alias("_b"))
-    return (
-        m.join(best, "cluster_id")
-        .select("eid", "cluster_id",
-                F.col("_b.best_eid").alias("survivor"),
-                (F.col("eid") == F.col("_b.best_eid")).cast("int")
-                .alias("is_survivor"))
-    )
+    best = _best_members(m, "cluster_id", ranks, id_col, rank_col,
+                         descending)
+    return m.join(best, "cluster_id").select(
+        "eid", "cluster_id", "survivor",
+        (F.col("eid") == F.col("survivor")).cast("int").alias("is_survivor"))

@@ -50,8 +50,7 @@ def der_dedup_pipeline(docs: DataFrame, id_col: str = "doc_id",
     filtered = ck.stage(
         spark, "block_cleaning",
         lambda: BC.clean_blocks(postings, purging_smoothing,
-                                filtering_ratio, materialize=False,
-                                keep_size=True),
+                                filtering_ratio, keep_size=True),
         fingerprint)
     candidates = ck.stage(
         spark, "cnp",
@@ -194,26 +193,26 @@ def corpus_clean_pipeline(docs: DataFrame, id_col: str = "doc_id",
     if rk is not None:
         # tiered representative: best-ranked cluster member, not the
         # CC label (which is the cluster-min id by construction)
-        reps = DD.cluster_survivors(clusters, rk).localCheckpoint()
-        drops.append(reps.where(F.col("is_survivor") == 0).select(
-            "eid", F.lit("near_dup").alias("status"),
-            F.col("survivor").cast("long").alias("survivor")))
-        kept = reps.where(F.col("is_survivor") == 1).select(
-            "eid", F.lit("kept").alias("status"),
-            F.col("eid").cast("long").alias("survivor"))
+        reps = DD.cluster_survivors(clusters, rk).select("eid", "survivor")
     else:
-        drops.append(clusters.where(
-            F.col("cluster_id") != F.col("eid")).select(
-            "eid", F.lit("near_dup").alias("status"),
-            F.col("cluster_id").cast("long").alias("survivor")))
-        kept = clusters.where(F.col("cluster_id") == F.col("eid")).select(
-            "eid", F.lit("kept").alias("status"),
-            F.col("eid").cast("long").alias("survivor"))
+        reps = clusters.select("eid", F.col("cluster_id").alias("survivor"))
 
-    out = kept
+    out = _near_dup_status(reps)
     for dr in drops:
         out = out.unionByName(dr)
     return out
+
+
+def _near_dup_status(survivors: DataFrame) -> DataFrame:
+    """(eid, survivor) near-dup cluster assignments -> (eid, status,
+    survivor): ``kept`` iff the doc is its own survivor, else
+    ``near_dup``. The labels the batch cleaner and the streaming
+    reconciliation both emit."""
+    return survivors.select(
+        "eid",
+        F.when(F.col("survivor") == F.col("eid"), F.lit("kept"))
+        .otherwise(F.lit("near_dup")).alias("status"),
+        F.col("survivor").cast("long").alias("survivor"))
 
 
 def minhash_dedup_pipeline(docs: DataFrame, id_col: str = "doc_id",

@@ -296,6 +296,23 @@ def _docs(spark, sf_dir):
     return load_documents(spark, sf_dir)
 
 
+def _crawl_docs(spark, sf_dir):
+    """(doc_id, text, url): the testdata has no url column, so one is
+    derived IDENTICALLY in engine and oracle from (source, doc_id):
+    uppercase scheme/host + default port + tracking params + fragment
+    variants that all canonicalize together."""
+    return _docs(spark, sf_dir).select(
+        "doc_id", "text",
+        F.concat(
+            F.lit("HTTPS://"), F.upper("source"),
+            F.lit(".example.com:443/Crawl/"),
+            (F.col("doc_id") % 50).cast("string"), F.lit("/"),
+            F.when(F.col("doc_id") % 3 == 0,
+                   F.lit("?utm_source=feed&b=2&a=1#frag"))
+            .when(F.col("doc_id") % 3 == 1, F.lit("?a=1&b=2"))
+            .otherwise(F.lit(""))).alias("url"))
+
+
 def q_sb_blocks(spark, sf_dir):
     p = BB.standard_blocking(_docs(spark, sf_dir))
     return p.groupBy(F.col("key").alias("token")).agg(
@@ -609,18 +626,9 @@ def q_meta_factory_wnp(spark, sf_dir):
 def q_corpus_clean(spark, sf_dir):
     """The full four-stage cleaning pipeline (url dedup -> exact dedup
     -> Gopher gate -> MinHash-LSH near-dup + CC) with per-doc drop
-    status — derived url column as in url_dedup."""
+    status, over the derived crawl urls of :func:`_crawl_docs`."""
     from pyjedai_spark.pipeline import corpus_clean_pipeline
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text",
-        F.concat(
-            F.lit("HTTPS://"), F.upper("source"),
-            F.lit(".example.com:443/Crawl/"),
-            (F.col("doc_id") % 50).cast("string"), F.lit("/"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit("?utm_source=feed&b=2&a=1#frag"))
-            .when(F.col("doc_id") % 3 == 1, F.lit("?a=1&b=2"))
-            .otherwise(F.lit(""))).alias("url"))
+    docs = _crawl_docs(spark, sf_dir)
     # explicitly uncapped: the DuckDB oracle enumerates every bucket, so
     # the registry surface must too (the production DEFAULT is capped)
     out = corpus_clean_pipeline(docs, url_col="url", max_bucket=None)
@@ -635,16 +643,7 @@ def q_corpus_clean_tiered(spark, sf_dir):
     survivor, so the quality-gate and near-dup stages see different
     rows than the min-id pipeline where it matters."""
     from pyjedai_spark.pipeline import corpus_clean_pipeline
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text",
-        F.concat(
-            F.lit("HTTPS://"), F.upper("source"),
-            F.lit(".example.com:443/Crawl/"),
-            (F.col("doc_id") % 50).cast("string"), F.lit("/"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit("?utm_source=feed&b=2&a=1#frag"))
-            .when(F.col("doc_id") % 3 == 1, F.lit("?a=1&b=2"))
-            .otherwise(F.lit(""))).alias("url"))
+    docs = _crawl_docs(spark, sf_dir)
     rk = A.quality_score(docs).select(
         F.col("eid").alias("doc_id"), F.col("quality_score").alias("rank"))
     out = corpus_clean_pipeline(docs, url_col="url", max_bucket=None,
@@ -666,16 +665,7 @@ def q_streaming_reconciled(spark, sf_dir):
     from pyjedai_spark.streaming.incremental_clean import (
         process_clean_increment, reconcile_clean_state)
 
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text",
-        F.concat(
-            F.lit("HTTPS://"), F.upper("source"),
-            F.lit(".example.com:443/Crawl/"),
-            (F.col("doc_id") % 50).cast("string"), F.lit("/"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit("?utm_source=feed&b=2&a=1#frag"))
-            .when(F.col("doc_id") % 3 == 1, F.lit("?a=1&b=2"))
-            .otherwise(F.lit(""))).alias("url"))
+    docs = _crawl_docs(spark, sf_dir)
     hi = docs.agg(F.max("doc_id")).first()[0] or 0
     b1, b2 = hi // 3, 2 * hi // 3
     tmp = tempfile.mkdtemp(prefix="pj_stream_rec_")
@@ -690,21 +680,10 @@ def q_streaming_reconciled(spark, sf_dir):
 
 
 def q_url_dedup(spark, sf_dir):
-    """URL canonicalization + URL-keyed dedup. The testdata has no url
-    column, so one is derived IDENTICALLY in engine and oracle from
-    (source, doc_id): uppercase scheme/host + default port + tracking
-    params + fragment variants that all canonicalize together."""
+    """URL canonicalization + URL-keyed dedup over the derived crawl
+    urls of :func:`_crawl_docs`."""
     from pyjedai_spark.functions import urls as U
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.lit("HTTPS://"), F.upper("source"),
-            F.lit(".example.com:443/Crawl/"),
-            (F.col("doc_id") % 50).cast("string"), F.lit("/"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit("?utm_source=feed&b=2&a=1#frag"))
-            .when(F.col("doc_id") % 3 == 1, F.lit("?a=1&b=2"))
-            .otherwise(F.lit(""))).alias("url"))
+    docs = _crawl_docs(spark, sf_dir)
     return U.url_dedup(docs).select(
         F.col("eid").alias("doc_id"), "url_canon", "survivor", "is_dup")
 
@@ -1547,10 +1526,10 @@ def q_meta_cnp_cleaned(spark, sf_dir):
     Standalone CNP on raw webtext blocks is quadratic in the hot-token
     mega-blocks; cleaning first is the scale path."""
     docs = _docs(spark, sf_dir)
-    # fused purge+filter (clean_blocks): tokenize + cardinality-agg run
-    # once instead of the naive chain's 2x/3x
-    p = BC.clean_blocks(BB.standard_blocking(docs), smoothing_factor=1.0,
-                        ratio=0.8, keep_size=True)
+    # fused purge+filter (clean_blocks) over materialized postings:
+    # tokenize + cardinality-agg run once instead of the naive chain's 2x/3x
+    p = BC.clean_blocks(BB.standard_blocking(docs).localCheckpoint(),
+                        smoothing_factor=1.0, ratio=0.8, keep_size=True)
     # stage barrier: CNP references its input 4x; see checkpoint.stage
     p = p.localCheckpoint()
     e = CC.cardinality_node_pruning(p, "JS", num_entities=docs.count())

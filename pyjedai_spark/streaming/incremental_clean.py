@@ -26,14 +26,21 @@ connected components, after which the state matches
 test + the shared DuckDB oracle of the ``streaming_reconciled``
 registry query).
 
+Each cleaning decision has one implementation shared with the batch
+pipeline: the URL key (``urls._url_key``, null-url sentinel included),
+the content fingerprint (``analysis.doc_fingerprint``) and the
+kept/near_dup labeller (``pipeline._near_dup_status``, used by the
+reconciliation).
+
 State = six ``batch_id=N``-partitioned parquet stores (urls,
 fingerprints, LSH bands, doc texts, survivor pointers, verified
-near-dup edges) — the same
-table-as-state design as incremental_dedup: per-batch OVERWRITE
-partitions + strictly-prior reads make every batch idempotent under
-Structured Streaming retries, and the band-hash key keeps the near-dup
-probe a hash join, never a rescan (partition-pruned on a real Iceberg
-table at 10^12 docs).
+near-dup edges), written by incremental_dedup's ``_write_batch`` and
+probed by its ``_near_dup_probe`` — the same table-as-state design and
+the same band → strictly-prior bands → self-join → verify probe as
+``process_increment``: per-batch OVERWRITE partitions + strictly-prior
+reads make every batch idempotent under Structured Streaming retries,
+and the band-hash key keeps the near-dup probe a hash join, never a
+rescan (partition-pruned on a real Iceberg table at 10^12 docs).
 """
 
 from __future__ import annotations
@@ -45,8 +52,9 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis as A
 from ..functions import urls as U
-from ..operators import dedup as DD
-from .incremental_dedup import _band_table, _fs_exists, _read_prior
+from ..pipeline import _near_dup_status
+from .incremental_dedup import (_fs_exists, _near_dup_probe, _read_prior,
+                                _write_batch)
 
 
 def _first_seen_dedup(d: DataFrame, key: str, prior: DataFrame | None):
@@ -92,12 +100,9 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
     drops = []
 
     if url_col:
-        # same null-url sentinel as the batch url_dedup: a NULL url must
-        # not group in-batch nulls into one bogus dup window
-        cu = d.select("eid", F.coalesce(
-            U.canonical_url("url"),
-            F.concat(F.lit("\x00null:"), F.col("eid").cast("string"))
-        ).alias("url_canon"))
+        # the batch url_dedup's key: a NULL url must not group in-batch
+        # nulls into one bogus dup window
+        cu = d.select("eid", U._url_key("url", "eid").alias("url_canon"))
         udups, ukeep = _first_seen_dedup(
             cu, "url_canon", _read_prior(spark, p["urls"], batch_id))
         drops.append(udups.select(
@@ -124,23 +129,10 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
 
     # near-dup: probe = this batch's qualified docs; base = prior bands
     # ∪ batch bands (in-batch pairs included)
-    nb = _band_table(d, k, bands, shingle_size, "eid", "text") \
-        .localCheckpoint()
-    prior_bands = _read_prior(spark, p["bands"], batch_id)
-    base = nb if prior_bands is None else prior_bands.unionByName(nb)
-    cands = (
-        base.select("key", F.col("eid").alias("a"))
-        .join(nb.select("key", F.col("eid").alias("b")), "key")
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("id1"),
-                F.greatest("a", "b").alias("id2"))
-        .distinct()
-    )
-    prior_docs = _read_prior(spark, p["docs"], batch_id)
-    all_docs = d.select("eid", "text") if prior_docs is None \
-        else prior_docs.unionByName(d.select("eid", "text"))
-    ver = DD.jaccard_verify(cands, all_docs, jaccard_threshold,
-                            shingle_size, "eid", "text").localCheckpoint()
+    nb, ver = _near_dup_probe(d, p["bands"], p["docs"], batch_id,
+                              jaccard_threshold, k, bands, shingle_size,
+                              "eid", "text")
+    ver = ver.localCheckpoint()
 
     # survivor resolution: map every matched neighbor through the
     # survivor-pointer store (a dropped neighbor forwards to its kept
@@ -192,26 +184,22 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
         out = out.unionByName(dr)
     out = out.localCheckpoint()
 
-    part = f"batch_id={batch_id}"
-    out.write.mode("overwrite").parquet(os.path.join(out_dir, part))
+    _write_batch(out, out_dir, batch_id)
     if new_urls is not None:
-        new_urls.write.mode("overwrite").parquet(
-            os.path.join(p["urls"], part))
-    ekeep.write.mode("overwrite").parquet(os.path.join(p["fps"], part))
-    nb.write.mode("overwrite").parquet(os.path.join(p["bands"], part))
-    d.select("eid", "text").write.mode("overwrite").parquet(
-        os.path.join(p["docs"], part))
+        _write_batch(new_urls, p["urls"], batch_id)
+    _write_batch(ekeep, p["fps"], batch_id)
+    _write_batch(nb, p["bands"], batch_id)
+    _write_batch(d.select("eid", "text"), p["docs"], batch_id)
     # survivor pointers for every non-kept doc that HAS a canonical
     # (url/exact/near dups — low_quality has none)
-    out.where(F.col("status") != "kept").where(
-        F.col("survivor").isNotNull()).select("eid", "survivor") \
-        .write.mode("overwrite").parquet(os.path.join(p["surv"], part))
+    _write_batch(out.where(F.col("status") != "kept").where(
+        F.col("survivor").isNotNull()).select("eid", "survivor"),
+        p["surv"], batch_id)
     # verified near-dup edges touching this batch — the raw material the
     # periodic reconciliation replays through global CC (pointer stores
     # alone lose bridge edges: a doc matching two kept docs records only
     # its min survivor)
-    ver.select("id1", "id2").write.mode("overwrite").parquet(
-        os.path.join(p["edges"], part))
+    _write_batch(ver.select("id1", "id2"), p["edges"], batch_id)
 
 
 def reconcile_clean_state(spark, state_dir: str, out_dir: str) -> DataFrame:
@@ -246,12 +234,8 @@ def reconcile_clean_state(spark, state_dir: str, out_dir: str) -> DataFrame:
         edges = nodes.select(F.col("eid").alias("id1"),
                              F.col("eid").alias("id2")).limit(0)
     clusters = CL.connected_components(edges, nodes=nodes)
-    merged = clusters.select(
-        "eid",
-        F.when(F.col("cluster_id") == F.col("eid"), F.lit("kept"))
-        .otherwise(F.lit("near_dup")).alias("status"),
-        F.col("cluster_id").cast("long").alias("survivor"))
-    return passthrough.unionByName(merged)
+    return passthrough.unionByName(_near_dup_status(
+        clusters.select("eid", F.col("cluster_id").alias("survivor"))))
 
 
 def incremental_clean_stream(spark, input_dir: str, state_dir: str,

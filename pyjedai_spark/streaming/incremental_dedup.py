@@ -61,6 +61,48 @@ def _read_prior(spark: SparkSession, path: str,
     return df.where(F.col("batch_id") < batch_id).drop("batch_id")
 
 
+def _write_batch(df: DataFrame, store: str, batch_id: int) -> None:
+    """Write ``df`` as the ``batch_id=N`` partition of ``store`` with
+    OVERWRITE — what makes a retried batch replace its own partial
+    output instead of appending a duplicate."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(store, f"batch_id={batch_id}"))
+
+
+def _near_dup_probe(docs: DataFrame, bands_path: str, docs_path: str,
+                    batch_id: int, threshold: float, k: int, bands: int,
+                    shingle_size: int, id_col: str,
+                    text_col: str) -> tuple[DataFrame, DataFrame]:
+    """(band table, verified pairs) of the pinned micro-batch ``docs``
+    against the band and doc stores of strictly-earlier batches.
+
+    Candidates are (store ∪ batch) x batch on the band-hash key,
+    canonicalized — a pair is emitted exactly once, in the micro-batch
+    where its LATEST member arrived (later batches have neither member
+    in the probe side). id order is NOT arrival order, so canonicalize
+    with least/greatest rather than an id-directional join. Verified
+    against full shingle sets; old docs are read from the doc store."""
+    spark = docs.sparkSession
+    nb = _band_table(docs, k, bands, shingle_size, id_col,
+                     text_col).localCheckpoint()
+    prior_bands = _read_prior(spark, bands_path, batch_id)
+    base = nb if prior_bands is None else prior_bands.unionByName(nb)
+    cands = (
+        base.select("key", F.col("eid").alias("a"))
+        .join(nb.select("key", F.col("eid").alias("b")), "key")
+        .where(F.col("a") != F.col("b"))
+        .select(F.least("a", "b").alias("id1"),
+                F.greatest("a", "b").alias("id2"))
+        .distinct()
+    )
+    batch_docs = docs.select(id_col, text_col)
+    prior_docs = _read_prior(spark, docs_path, batch_id)
+    all_docs = batch_docs if prior_docs is None \
+        else prior_docs.unionByName(batch_docs)
+    return nb, DD.jaccard_verify(cands, all_docs, threshold, shingle_size,
+                                 id_col, text_col)
+
+
 def process_increment(new_docs: DataFrame, state_dir: str,
                       pairs_dir: str, threshold: float = 0.5,
                       k: int = 32, bands: int = 8, shingle_size: int = 3,
@@ -75,49 +117,15 @@ def process_increment(new_docs: DataFrame, state_dir: str,
     filter to ``batch_id < N`` — so a batch that failed between writes
     and re-runs replaces its own partial output instead of appending a
     duplicate, and never sees its own half-written state."""
-    spark = new_docs.sparkSession
     new_docs = new_docs.localCheckpoint()  # pin the micro-batch
-    nb = _band_table(new_docs, k, bands, shingle_size, id_col,
-                     text_col).localCheckpoint()
-
     store_path = os.path.join(state_dir, "bands")
     docs_path = docs_store_dir or os.path.join(state_dir, "docs")
-
-    # candidates: (store ∪ new) x new, canonicalized — a pair is emitted
-    # exactly once, in the micro-batch where its LATEST member arrived
-    # (later batches have neither member in the probe side). id order is
-    # NOT arrival order, so canonicalize with least/greatest rather than
-    # an id-directional join.
-    probe = nb.select("key", F.col("eid").alias("b"))
-    seen = _read_prior(spark, store_path, batch_id)
-    if seen is not None:
-        base = seen.select("key", F.col("eid").alias("a")).union(
-            nb.select("key", F.col("eid").alias("a")))
-    else:
-        base = nb.select("key", F.col("eid").alias("a"))
-    cands = (
-        base.join(probe, "key")
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("id1"),
-                F.greatest("a", "b").alias("id2"))
-        .distinct()
-    )
-
-    # verify against full shingle sets: old docs read from the doc store
-    prior_docs = _read_prior(spark, docs_path, batch_id)
-    if prior_docs is not None:
-        all_docs = prior_docs.select(id_col, text_col).unionByName(
-            new_docs.select(id_col, text_col))
-    else:
-        all_docs = new_docs.select(id_col, text_col)
-    verified = DD.jaccard_verify(cands, all_docs, threshold, shingle_size,
-                                 id_col, text_col)
-
-    part = f"batch_id={batch_id}"
-    verified.write.mode("overwrite").parquet(os.path.join(pairs_dir, part))
-    nb.write.mode("overwrite").parquet(os.path.join(store_path, part))
-    new_docs.select(id_col, text_col).write.mode("overwrite").parquet(
-        os.path.join(docs_path, part))
+    nb, verified = _near_dup_probe(new_docs, store_path, docs_path,
+                                   batch_id, threshold, k, bands,
+                                   shingle_size, id_col, text_col)
+    _write_batch(verified, pairs_dir, batch_id)
+    _write_batch(nb, store_path, batch_id)
+    _write_batch(new_docs.select(id_col, text_col), docs_path, batch_id)
 
 
 def start_incremental_dedup(spark: SparkSession, input_dir: str,

@@ -32,6 +32,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ..functions import analysis as A
+
 FIRST_SEEN_SCHEMA = StructType([
     StructField("fingerprint", StringType()),
     StructField("doc_id", LongType()),
@@ -71,9 +73,8 @@ def streaming_exact_dedup(stream: DataFrame, id_col: str = "doc_id",
     document stream: fingerprint = md5 of whitespace-normalized
     lowercased text (same fingerprint as the batch ``exact_dedup``), one
     output row per NEW fingerprint. Use outputMode('update')."""
-    fp = F.md5(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     keyed = stream.select(
-        fp.alias("fingerprint"), F.col(id_col).cast("long").alias("doc_id"))
+        A._fingerprint(text_col).alias("fingerprint"), F.col(id_col).cast("long").alias("doc_id"))
     return (
         keyed.groupBy("fingerprint")
         .applyInPandasWithState(

@@ -49,7 +49,6 @@ for i in range(iters):
     spark.sparkContext.setJobDescription("block_cleaning")
     filtered = stage("block_cleaning",
                      lambda: BC.clean_blocks(postings, 1.0, 0.8,
-                                             materialize=False,
                                              keep_size=True))
     spark.sparkContext.setJobDescription("cnp")
     candidates = stage("cnp", lambda: CC.cardinality_node_pruning(

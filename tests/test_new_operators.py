@@ -113,11 +113,11 @@ def test_ext_qgram_column_path_matches_reference_combos(spark, docs):
         assert set(r["ks"]) == _py_ext_qgram_keys(texts[r["doc_id"]])
 
 
-def test_ext_qgram_udf_fallback_agrees(spark, docs):
+def test_ext_qgram_udf_keys_agree(spark, docs):
     sample = docs.limit(40)
     a = BB.extended_qgrams_blocking(sample, q=4, threshold=0.95)
-    b = BB.extended_qgrams_blocking(sample, q=4, threshold=0.95,
-                                    udf_fallback=True)
+    b = BB.keep_multi_entity_blocks(BB._postings(
+        sample, BB._udf_qgram_combo_keys("text", 4, 0.95), "doc_id"), 2)
     assert sorted((r["key"], r["eid"]) for r in a.collect()) == \
         sorted((r["key"], r["eid"]) for r in b.collect())
 
@@ -489,18 +489,38 @@ def test_cluster_survivors_all_tied_degrades_to_min_id(spark):
 
 def test_cluster_survivors_string_ids(spark):
     """Non-numeric ids (urls) must survive intact — no silent long
-    cast to NULL (r4 ADVICE). Tie-break is min on the STRING order."""
+    cast to NULL (r4 ADVICE). Tie-break is min on the STRING order.
+    url_dedup and exact_dedup keep the same survivors for the same
+    string ids and ranks (no arithmetic on the id), and a NaN rank sorts
+    last in all three, behind a real rank."""
+    from pyjedai_spark.functions import urls as U
     from pyjedai_spark.operators import dedup as DD
     members = spark.createDataFrame(
-        [("u/b", 1), ("u/a", 1), ("u/c", 1), ("u/z", 2)],
+        [("u/b", 1), ("u/a", 1), ("u/c", 1), ("u/z", 2),
+         ("d1", 3), ("d2", 3)],
         "eid string, cluster_id int")
     ranks = spark.createDataFrame(
-        [("u/b", 0.9), ("u/a", 0.9), ("u/c", 0.1)],
+        [("u/b", 0.9), ("u/a", 0.9), ("u/c", 0.1),
+         ("d1", 1.0), ("d2", float("nan"))],
         "eid string, rank double")
+    want = {"u/a": "u/a", "u/b": "u/a", "u/c": "u/a", "u/z": "u/z",
+            "d1": "d1", "d2": "d1"}
     out = {r["eid"]: (r["survivor"], r["is_survivor"])
            for r in DD.cluster_survivors(members, ranks).collect()}
-    assert out == {"u/a": ("u/a", 1), "u/b": ("u/a", 0),
-                   "u/c": ("u/a", 0), "u/z": ("u/z", 1)}
+    assert out == {e: (s, int(e == s)) for e, s in want.items()}
+
+    group = F.col("cluster_id").cast("string")
+    docs = members.select(
+        F.col("eid").alias("doc_id"),
+        F.concat(F.lit("https://ex.com/"), group).alias("url"),
+        F.concat(F.lit("same text "), group).alias("text"))
+    doc_ranks = ranks.withColumnRenamed("eid", "doc_id")
+    by_url = {r["eid"]: r["survivor"]
+              for r in U.url_dedup(docs, ranks=doc_ranks).collect()}
+    assert by_url == want
+    by_text = {r["eid"]: r["keep"]
+               for r in DD.exact_dedup(docs, ranks=doc_ranks).collect()}
+    assert by_text == {e: int(e == s) for e, s in want.items()}
 
 
 def test_cluster_survivors_duplicate_ranks_rows(spark):

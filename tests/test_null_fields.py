@@ -50,6 +50,9 @@ def test_url_dedup_null_urls_survive(spark):
 
 
 def test_exact_dedup_null_text_groups_as_empty(spark):
+    """Null text fingerprints like empty text, in exact_dedup and in
+    source_stats' corpus-wide duplicate fraction alike."""
+    from pyjedai_spark.functions.analysis import source_stats
     from pyjedai_spark.operators.dedup import exact_dedup
 
     out = exact_dedup(_corpus(spark)).collect()
@@ -61,6 +64,10 @@ def test_exact_dedup_null_text_groups_as_empty(spark):
     # doc 5 has null text too -> same empty fingerprint as 6 and 8
     assert by_id[5]["fingerprint"] == by_id[6]["fingerprint"]
     assert by_id[5]["keep"] == 1 and by_id[6]["keep"] == 0
+    # every doc counted; dups are 3/4 (same text) and 5/6/8 (null text)
+    stats = source_stats(_corpus(spark).withColumn("source", F.lit("s")))
+    assert [(r["n_docs"], r["dup_frac"]) for r in stats.collect()] \
+        == [(8, 0.625)]
 
 
 def test_gopher_quality_null_text_fails_gate(spark):

@@ -203,7 +203,7 @@ def test_clean_blocks_equals_purge_then_filter(spark, docs):
     p = BB.standard_blocking(docs.limit(300)).localCheckpoint()
     for s, r in [(1.0, 0.8), (1.025, 0.5)]:
         chain = BC.block_filtering(BC.block_purging(p, s), r)
-        fused = BC.clean_blocks(p, s, r, materialize=False)
+        fused = BC.clean_blocks(p, s, r)
         a = {tuple(x) for x in chain.collect()}
         b = {tuple(x) for x in fused.collect()}
         assert a == b
@@ -216,8 +216,7 @@ def test_clean_blocks_keep_size_matches_recount(spark, docs):
     from pyjedai_spark.operators import block_cleaning as BC
 
     p = BB.standard_blocking(docs.limit(300)).localCheckpoint()
-    fused = BC.clean_blocks(p, 1.0, 0.8, materialize=False,
-                            keep_size=True).localCheckpoint()
+    fused = BC.clean_blocks(p, 1.0, 0.8, keep_size=True).localCheckpoint()
     assert "bs" in fused.columns
     recount = fused.groupBy("key").agg(F.count("*").alias("n"))
     bad = fused.join(recount, "key").where(F.col("bs") != F.col("n"))
@@ -232,8 +231,7 @@ def test_edge_weights_precomputed_bs_equals_recomputed(spark, docs):
     from pyjedai_spark.operators import comparison_cleaning as CC
 
     p = BB.standard_blocking(docs.limit(300)).localCheckpoint()
-    fused = BC.clean_blocks(p, 1.0, 0.8, materialize=False,
-                            keep_size=True).localCheckpoint()
+    fused = BC.clean_blocks(p, 1.0, 0.8, keep_size=True).localCheckpoint()
     with_bs = {(r["id1"], r["id2"]): (r["weight"], r["cbs"])
                for r in CC.edge_weights(fused, "JS").collect()}
     without = {(r["id1"], r["id2"]): (r["weight"], r["cbs"])
