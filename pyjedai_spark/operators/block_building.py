@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from .ccer import _is_ccer, ccer_pairs
 
 
 def _postings(docs: DataFrame, keys_col, id_col: str) -> DataFrame:
@@ -147,22 +148,26 @@ def extended_qgrams_blocking(docs: DataFrame, q: int = 6,
                                     max_block_size)
 
 
-def block_pairs(postings: DataFrame, salt_threshold: int | None = None) -> DataFrame:
+def block_pairs(postings: DataFrame,
+                max_block_size: int | None = None) -> DataFrame:
     """All distinct comparisons implied by a block collection, as an edge
     list (id1 < id2) — the Dirty-ER cardinality n(n-1)/2 per block
     (datamodel.py:496-506) materialized as a within-key self-join, never a
-    collect_list + python combinations.
+    collect_list + python combinations. CCER postings (a ``side``
+    column) give the D1 x D2 pairs instead (``ccer.ccer_pairs``).
 
     Scale note: the self-join shuffles both sides hash-partitioned by
     ``key``; AQE skew-join splits a hot key's partitions. Upstream
     purging/filtering/size-caps must bound the per-key quadratic blowup —
-    ``salt_threshold`` is a belt-and-braces guard that *drops* keys whose
-    block size exceeds it (salting cannot fix an inherently quadratic
-    explosion, only re-balance it).
+    ``max_block_size`` is a belt-and-braces guard that *drops* keys whose
+    block size exceeds it (to keep a hot block, split it with
+    :func:`block_pairs_salted`).
     """
+    if _is_ccer(postings):
+        return ccer_pairs(postings)
     p = postings
-    if salt_threshold is not None:
-        p = keep_multi_entity_blocks(p, 2, salt_threshold)
+    if max_block_size is not None:
+        p = keep_multi_entity_blocks(p, 2, max_block_size)
     a = p.select(F.col("key"), F.col("eid").alias("id1"))
     b = p.select(F.col("key"), F.col("eid").alias("id2"))
     return (

@@ -2,7 +2,8 @@
 
 Both reduce the comparison space *before* any pair explosion — at web
 scale these (plus size caps) are what keep Zipfian mega-blocks from
-producing quadratic shuffles.
+producing quadratic shuffles. Both ER modes: postings with a ``side``
+column (``ccer.ccer_blocking``) get CCER cardinalities and validity.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ccer import _is_ccer
+
 
 def java_math_round(x: float) -> int:
     """int(x + 0.5) — Java half-up rounding (reference utils.py:204-205).
@@ -19,11 +22,11 @@ def java_math_round(x: float) -> int:
     return int(math.floor(x + 0.5))
 
 
-def block_cardinalities(postings: DataFrame, dirty: bool = True) -> DataFrame:
+def block_cardinalities(postings: DataFrame) -> DataFrame:
     """(key, block_size, cardinality). DER cardinality = s(s-1)/2;
     CCER (postings carry ``side``) cardinality = n1*n2
     (datamodel.py:496-506, both branches)."""
-    if not dirty:
+    if _is_ccer(postings):
         return postings.groupBy("key").agg(
             F.count("*").alias("block_size"),
             (F.sum((F.col("side") == 1).cast("long"))
@@ -83,8 +86,8 @@ def _scan_threshold(cards: DataFrame, smoothing_factor: float) -> float:
                              smoothing_factor)
 
 
-def block_purging(postings: DataFrame, smoothing_factor: float = 1.025,
-                  dirty: bool = True) -> DataFrame:
+def block_purging(postings: DataFrame,
+                  smoothing_factor: float = 1.025) -> DataFrame:
     """Drop blocks whose cardinality exceeds the scanned threshold
     (BlockPurging, block_cleaning.py:110-207).
 
@@ -92,7 +95,7 @@ def block_purging(postings: DataFrame, smoothing_factor: float = 1.025,
     window over the (tiny) level table -> collect scalar -> filter. The
     only driver-side piece is the O(#levels) threshold scan.
     """
-    cards = block_cardinalities(postings, dirty)
+    cards = block_cardinalities(postings)
     thr = _scan_threshold(cards, smoothing_factor)
     keep = cards.where(F.col("cardinality") <= F.lit(thr)).select("key")
     # broadcast the kept-key whitelist when it is small; Catalyst/AQE will
@@ -100,8 +103,7 @@ def block_purging(postings: DataFrame, smoothing_factor: float = 1.025,
     return postings.join(keep, "key", "left_semi")
 
 
-def block_filtering(postings: DataFrame, ratio: float = 0.8,
-                    dirty: bool = True) -> DataFrame:
+def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
     """Retain each entity only in the java_round(ratio*|blocks(e)|)
     smallest-cardinality blocks it occurs in, then re-drop singleton
     blocks (BlockFiltering, block_cleaning.py:33-108, core 82-97).
@@ -111,16 +113,16 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8,
     block_cleaning.py:209-210); we use (cardinality, key) — an explicit
     total order that both the Spark plan and any SQL oracle share.
     """
-    cards = block_cardinalities(postings, dirty).select("key", "cardinality")
-    return _filter_with_cards(postings.join(cards, "key"), ratio, dirty)
+    cards = block_cardinalities(postings).select("key", "cardinality")
+    return _filter_with_cards(postings.join(cards, "key"), ratio)
 
 
-def _filter_with_cards(p: DataFrame, ratio: float, dirty: bool,
+def _filter_with_cards(p: DataFrame, ratio: float,
                        keep_size: bool = False) -> DataFrame:
     """BlockFiltering core over postings that already carry their
     block's ``cardinality`` column (shared by :func:`block_filtering`
     and the fused :func:`clean_blocks`). ``keep_size`` retains the
-    REBUILT block size as ``bs`` (dirty path only)."""
+    REBUILT block size as ``bs`` (Dirty ER only)."""
     w = Window.partitionBy("eid").orderBy(F.col("cardinality").asc(), F.col("key").asc())
     ranked = (
         p.withColumn("_rn", F.row_number().over(w))
@@ -130,7 +132,7 @@ def _filter_with_cards(p: DataFrame, ratio: float, dirty: bool,
     kept = ranked.where(
         F.col("_rn") <= F.floor(F.lit(ratio) * F.col("_n") + F.lit(0.5))
     )
-    if not dirty:
+    if _is_ccer(p):
         # CCER validity after the rebuild: a block survives only if BOTH
         # datasets still contribute (drop_single_entity_blocks CCER branch)
         kept = kept.select("key", "eid", "side")
@@ -150,8 +152,7 @@ def _filter_with_cards(p: DataFrame, ratio: float, dirty: bool,
 
 
 def clean_blocks(postings: DataFrame, smoothing_factor: float = 1.025,
-                 ratio: float = 0.8, dirty: bool = True,
-                 keep_size: bool = False) -> DataFrame:
+                 ratio: float = 0.8, keep_size: bool = False) -> DataFrame:
     """BlockPurging + BlockFiltering fused: output-identical to
     ``block_filtering(block_purging(p, s), r)``, but the block-cardinality
     aggregate runs ONCE (purging drops whole blocks, so a surviving
@@ -166,10 +167,10 @@ def clean_blocks(postings: DataFrame, smoothing_factor: float = 1.025,
     """
     # one groupBy over the postings, materialized because it feeds both
     # the level collect and the purge+filter join below
-    cards = block_cardinalities(postings, dirty).localCheckpoint()
+    cards = block_cardinalities(postings).localCheckpoint()
     thr = _scan_threshold(cards, smoothing_factor)
     kept_cards = cards.where(F.col("cardinality") <= F.lit(thr)).select(
         "key", "cardinality")
     # inner join = purge semi-join + cardinality attach in one exchange
-    return _filter_with_cards(postings.join(kept_cards, "key"), ratio, dirty,
+    return _filter_with_cards(postings.join(kept_cards, "key"), ratio,
                               keep_size=keep_size)

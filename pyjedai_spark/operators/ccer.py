@@ -1,4 +1,5 @@
-"""Clean-Clean ER (two-dataset linkage) variants.
+"""Clean-Clean ER (two-dataset linkage): the CCER postings, pair space
+and counters.
 
 Reference semantics (is_dirty_er=False throughout pyJedAI):
 - a block is valid only if BOTH datasets contribute at least one entity
@@ -6,8 +7,19 @@ Reference semantics (is_dirty_er=False throughout pyJedAI):
 - the comparison space of a block is |D1-side| x |D2-side|
   (datamodel.py:496-506), never intra-dataset pairs;
 - ConnectedComponentsClustering keeps ONLY 2-element clusters
-  (clustering.py:466-467 — one entity from each side);
+  (clustering.py:466-467 — one entity from each side;
+  ``clustering.connected_components_clustering(dirty=False)``);
 - UniqueMappingClustering is CCER-only (clustering.py:477-539).
+
+The ER mode is a property of the postings, as the reference reads it
+from its data (``is_dirty_er = dataset_2 is None``, datamodel.py:114):
+:func:`ccer_blocking` emits (key, eid, side), and a postings table
+with a ``side`` column is CCER (:func:`_is_ccer`). Block cleaning,
+``block_building.block_pairs`` and every meta-blocking method in
+``comparison_cleaning`` read the mode from it and route here for what
+differs: the D1 x D2 pairs, the CCER counters
+(:func:`ccer_edge_weights`) and CNP's side-flag orientation
+(:func:`_ccer_cnp`). Pruning rules and weight formulas exist once.
 
 Spark shape: one postings DataFrame (key, eid, side) for both datasets
 — candidate pairs are a side-1 x side-2 join within key, so Catalyst
@@ -19,10 +31,15 @@ datamodel.py:176-177, is not needed when ids are already distinct).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+
+
+def _is_ccer(postings: DataFrame) -> bool:
+    """A postings table is Clean-Clean ER iff it carries ``side``."""
+    return "side" in postings.columns
 
 
 def ccer_blocking(d1: DataFrame, d2: DataFrame, id_col: str = "doc_id",
@@ -37,8 +54,6 @@ def ccer_blocking(d1: DataFrame, d2: DataFrame, id_col: str = "doc_id",
         ).distinct().withColumn("side", F.lit(s))
 
     p = side(d1, 1).union(side(d2, 2))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("key")
     p = (
         p.withColumn("_n1", F.sum((F.col("side") == 1).cast("int")).over(w))
@@ -69,15 +84,18 @@ def ccer_edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
       D      = total distinct D1 x D2 comparisons
       N      = #valid blocks
 
-    CN-*/SN-* replicate the reference's dangling-else quirk
-    (comparison_cleaning.py:376-385): CN-* accumulates BOTH 1/card and
-    +1 per block, SN-* only 1/size. Returns (id1 in D1, id2 in D2,
-    weight, cbs).
+    The counters differ from Dirty ER; the scheme formulas are
+    ``comparison_cleaning._weight_expr``'s (incl. the CN-*/SN-*
+    dangling-else quirk). Reached through
+    ``comparison_cleaning.edge_weights`` on ``side``-carrying postings.
+    Returns (id1 in D1, id2 in D2, weight, cbs).
     """
+    from .comparison_cleaning import (CN_SCHEMES, NEEDS_CMP, SN_SCHEMES,
+                                      _weight_expr)
+
     scheme = scheme.upper()
-    cn = scheme in {"CN-CBS", "CNC", "CND", "CNJ"}
-    sn = scheme in {"SN-CBS", "SNC", "SND", "SNJ"}
-    needs_cmp = scheme in {"EJS", "CNC", "SNC", "CND", "SND", "CNJ", "SNJ"}
+    cn = scheme in CN_SCHEMES
+    sn = scheme in SN_SCHEMES
 
     sizes = postings.groupBy("key").agg(
         F.sum((F.col("side") == 1).cast("long")).alias("b1"),
@@ -117,7 +135,8 @@ def ccer_edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
     if scheme in {"ECBS", "X2"}:
         num_blocks = postings.select("key").distinct().count()
 
-    if needs_cmp:
+    d_total = None
+    if scheme in NEEDS_CMP:
         # the edge table feeds three derivations (cmp1, cmp2, D) plus
         # the weight projection — materialize the stage boundary once
         # instead of re-running blocking+pairing per branch
@@ -130,127 +149,25 @@ def ccer_edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
         d_total = float(dp.count())
         e = e.join(cmp1, "id1").join(cmp2, "id2")
 
-    c, nb1, nb2 = F.col("counter"), F.col("nb1"), F.col("nb2")
-    if scheme in {"CBS", "CN-CBS", "SN-CBS"}:
-        w = c
-    elif scheme == "JS":
-        w = c / (nb1 + nb2 - c)
-    elif scheme == "COSINE":
-        w = c / F.sqrt(nb1 * nb2)
-    elif scheme == "DICE":
-        w = 2 * c / (nb1 + nb2)
-    elif scheme == "ECBS":
-        w = (c * F.log10(F.lit(float(num_blocks)) / nb1)
-             * F.log10(F.lit(float(num_blocks)) / nb2))
-    elif scheme == "EJS":
-        js = c / (nb1 + nb2 - c)
-        d = F.lit(d_total)
-        w = js * F.log10(d / F.col("cmp1")) * F.log10(d / F.col("cmp2"))
-    elif scheme in {"CNC", "SNC"}:
-        w = c / F.sqrt(F.col("cmp1") * F.col("cmp2"))
-    elif scheme in {"CND", "SND"}:
-        w = 2 * c / (F.col("cmp1") + F.col("cmp2"))
-    elif scheme in {"CNJ", "SNJ"}:
-        w = c / (F.col("cmp1") + F.col("cmp2") - c)
-    elif scheme == "X2":
-        from .comparison_cleaning import _chi_square
-
-        o11 = F.floor(c).cast("double")
-        o12 = (nb1 - F.floor(c)).cast("double")
-        o21 = (nb2 - F.floor(c)).cast("double")
-        o22 = (F.lit(float(num_blocks))
-               - (F.floor(c) + (nb1 - F.floor(c)) - F.floor(c))).cast("double")
-        w = _chi_square(o11, o12, o21, o22)
-    else:
-        raise ValueError(f"unsupported CCER scheme {scheme}")
+    w = _weight_expr(scheme, F.col("counter"), F.col("nb1"), F.col("nb2"),
+                     num_blocks, d_total)
     return e.select("id1", "id2", w.cast("double").alias("weight"),
                     F.col("cbs").cast("double").alias("cbs"))
 
 
-def ccer_wep(postings: DataFrame, scheme: str = "JS") -> DataFrame:
-    """WeightedEdgePruning on the CCER graph: keep w >= global mean.
-    WEP(EJS) is the reference's best published CCER configuration
-    (workflow.py:696-716)."""
-    e = ccer_edge_weights(postings, scheme).localCheckpoint()
-    mean = e.agg(F.avg("weight")).collect()[0][0] or 0.0
-    return e.where(F.col("weight") >= F.lit(mean) - 1e-9).select(
-        "id1", "id2", "weight")
-
-
-def _ccer_node_stat(e: DataFrame, agg) -> DataFrame:
-    bidir = e.select(F.col("id1").alias("node"), "weight").union(
-        e.select(F.col("id2").alias("node"), "weight")
-    )
-    return bidir.groupBy("node").agg(agg(F.col("weight")).alias("stat"))
-
-
-def ccer_wnp(postings: DataFrame, scheme: str = "CBS",
-             reciprocal: bool = False) -> DataFrame:
-    """WNP on the CCER graph: keep (i,j) if w >= avg(neighborhood_i)
-    OR (AND when reciprocal) w >= avg(neighborhood_j)."""
-    e = ccer_edge_weights(postings, scheme)
-    stats = _ccer_node_stat(e, F.avg)
-    e2 = (
-        e.join(stats.withColumnRenamed("node", "id1")
-               .withColumnRenamed("stat", "avg1"), "id1")
-        .join(stats.withColumnRenamed("node", "id2")
-              .withColumnRenamed("stat", "avg2"), "id2")
-    )
-    c1 = F.col("weight") >= F.col("avg1") - 1e-9
-    c2 = F.col("weight") >= F.col("avg2") - 1e-9
-    cond = (c1 & c2) if reciprocal else (c1 | c2)
-    return e2.where(cond).select("id1", "id2", "weight")
-
-
-def ccer_blast(postings: DataFrame, scheme: str = "X2") -> DataFrame:
-    """BLAST on the CCER graph: keep (i,j) if w >= (max_i + max_j)/4."""
-    e = ccer_edge_weights(postings, scheme)
-    stats = _ccer_node_stat(e, F.max)
-    e2 = (
-        e.join(stats.withColumnRenamed("node", "id1")
-               .withColumnRenamed("stat", "max1"), "id1")
-        .join(stats.withColumnRenamed("node", "id2")
-              .withColumnRenamed("stat", "max2"), "id2")
-    )
-    return e2.where(
-        F.col("weight") >= (F.col("max1") + F.col("max2")) / 4 - 1e-9
-    ).select("id1", "id2", "weight")
-
-
-def ccer_cep(postings: DataFrame, scheme: str = "JS",
-             k: int | None = None) -> DataFrame:
-    """CEP on the CCER graph: global top-K edges, K = floor(block
-    assignments / 2); reference PQ tie order (weight, id2, id1)."""
-    e = ccer_edge_weights(postings, scheme)
-    if k is None:
-        k = int(postings.count() / 2)
-    return (
-        e.orderBy(F.col("weight").desc(), F.col("id2").desc(),
-                  F.col("id1").desc())
-        .limit(k)
-        .select("id1", "id2", "weight")
-    )
-
-
-def ccer_cnp(postings: DataFrame, scheme: str = "CBS",
-             k: int | None = None, reciprocal: bool = False) -> DataFrame:
-    """CNP on the CCER graph: per-node top-k cross-side neighbors,
-    k = max(1, block_assignments / num_entities); RCNP keeps only
-    reciprocal pairs. Output stays (id1 in D1, id2 in D2)."""
-    e = ccer_edge_weights(postings, scheme)
-    if k is None:
-        num_entities = postings.select("eid").distinct().count()
-        ba = postings.count()
-        k = int(max(1.0, ba / num_entities))
-    # node-centric ranking on BOTH sides; orientation (D1, D2) kept via
-    # a side flag instead of least/greatest (ids are interleaved)
+def _ccer_cnp(e: DataFrame, k: int, reciprocal: bool) -> DataFrame:
+    """CNP's validity and orientation step on CCER edges ``e`` (id1 in
+    D1, id2 in D2, weight): per-node top-k cross-side neighbors; RCNP
+    keeps only reciprocal pairs. Called by
+    ``comparison_cleaning.cardinality_node_pruning``; the Dirty-ER body
+    orients by least/greatest, which interleaved CCER ids break, so the
+    orientation here is a side flag. Output stays (id1 in D1, id2 in
+    D2)."""
     bidir = e.select(F.col("id1").alias("u"), F.col("id2").alias("v"),
                      F.lit(1).alias("u_side"), "weight").union(
         e.select(F.col("id2").alias("u"), F.col("id1").alias("v"),
                  F.lit(2).alias("u_side"), "weight")
     )
-    from pyspark.sql import Window
-
     w_rank = Window.partitionBy("u").orderBy(F.col("weight").desc(),
                                              F.col("v").desc())
     nearest = bidir.withColumn("_rn", F.row_number().over(w_rank)).where(
@@ -276,40 +193,3 @@ def ccer_cnp(postings: DataFrame, scheme: str = "CBS",
         "weight",
     )
     return oriented.groupBy("id1", "id2").agg(F.max("weight").alias("weight"))
-
-
-def get_ccer_meta_blocking(acronym: str, postings: DataFrame,
-                           scheme: str | None = None, **kw) -> DataFrame:
-    """Acronym dispatch for the CCER pair space — mirror of
-    comparison_cleaning.get_meta_blocking_approach with the reference's
-    per-method default schemes."""
-    a = acronym.upper()
-    if a == "CP":
-        return ccer_pairs(postings).withColumn("weight", F.lit(1.0))
-    if a == "WEP":
-        return ccer_wep(postings, scheme or "CBS")
-    if a == "WNP":
-        return ccer_wnp(postings, scheme or "CBS")
-    if a == "RWNP":
-        return ccer_wnp(postings, scheme or "CN-CBS", reciprocal=True)
-    if a == "BLAST":
-        return ccer_blast(postings, scheme or "X2")
-    if a == "CEP":
-        return ccer_cep(postings, scheme or "JS", **kw)
-    if a == "CNP":
-        return ccer_cnp(postings, scheme or "CBS", **kw)
-    if a == "RCNP":
-        return ccer_cnp(postings, scheme or "CN-CBS", reciprocal=True, **kw)
-    raise ValueError(f"unknown CCER meta-blocking acronym {acronym}")
-
-
-def ccc_size2(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
-    """CCER ConnectedComponentsClustering: components of the match
-    graph, KEEPING ONLY 2-element clusters (clustering.py:466-467 —
-    the reference quirk; larger components are ambiguous matches)."""
-    from .clustering import connected_components
-
-    cc = connected_components(edges.select("id1", "id2"), nodes)
-    sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("n"))
-    return cc.join(sizes.where(F.col("n") == 2).select("cluster_id"),
-                   "cluster_id").select("eid", "cluster_id")

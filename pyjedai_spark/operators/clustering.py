@@ -137,8 +137,9 @@ def connected_components_clustering(edges: DataFrame,
                                     similarity_threshold: float | None = None,
                                     dirty: bool = True) -> DataFrame:
     """CCC (clustering.py:431-475): drop edges with weight <
-    threshold, components; CCER keeps only 2-element clusters
-    (lines 466-467), DER keeps all."""
+    threshold, components -> (eid, cluster_id); CCER (``dirty=False``)
+    keeps only 2-element clusters (lines 466-467), DER keeps all. The
+    mode is a flag here because match edges carry no ``side``."""
     e = edges
     if similarity_threshold is not None:
         wcol = "weight" if "weight" in e.columns else "sim"
@@ -146,7 +147,8 @@ def connected_components_clustering(edges: DataFrame,
     cc = connected_components(e.select("id1", "id2"), nodes)
     if not dirty:
         sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("n"))
-        cc = cc.join(sizes.where(F.col("n") == 2).select("cluster_id"), "cluster_id")
+        cc = cc.join(sizes.where(F.col("n") == 2).select("cluster_id"),
+                     "cluster_id").select("eid", "cluster_id")
     return cc
 
 

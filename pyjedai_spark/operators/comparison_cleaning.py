@@ -21,6 +21,13 @@ Weight schemes (_get_weight, comparison_cleaning.py:210-249), Dirty-ER:
 where |Bi| = #blocks of entity i, N = #blocks, cmp_i = #distinct
 comparisons of i, D = total distinct comparisons.
 
+Both ER modes run through the same methods: postings with a ``side``
+column (``ccer.ccer_blocking``) are Clean-Clean ER, so
+:func:`edge_weights` builds the D1 x D2 graph with CCER counters
+(``ccer.ccer_edge_weights``, the same scheme formulas) and every
+pruning rule below applies unchanged; CNP alone differs, orienting its
+output by side (``ccer._ccer_cnp``).
+
 All prune rules keep the numeric comparison inside a shared guard band
 EPS: floating-point thresholds (means/maxima) are computed by different
 engines in different orders; a 1e-9 band makes the retained-edge set
@@ -33,6 +40,8 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .ccer import _ccer_cnp, _is_ccer, ccer_edge_weights
 
 EPS = 1e-9
 
@@ -52,7 +61,6 @@ SALT_CHUNKS = 32
 
 
 def edge_weights(postings: DataFrame, scheme: str = "CBS",
-                 dirty: bool = True,
                  salt_threshold: int | None = SALT_BS_THRESHOLD,
                  salt_chunks: int = SALT_CHUNKS) -> DataFrame:
     """Blocking-graph edges (id1 < id2, weight) for a weighting scheme.
@@ -65,12 +73,12 @@ def edge_weights(postings: DataFrame, scheme: str = "CBS",
     buckets, the left side replicated per bucket — so one hot key's
     quadratic expansion spreads over ``salt_chunks`` tasks instead of
     one. Output-identical; ``salt_threshold=None`` disables.
-    """
-    if not dirty:
-        # CCER variant: postings carry a ``side`` column; the pair space
-        # is D1 x D2 within each key (operators/ccer.py)
-        from .ccer import ccer_edge_weights
 
+    CCER postings (a ``side`` column) route to
+    ``ccer.ccer_edge_weights``: edges (id1 in D1, id2 in D2) over the
+    D1 x D2 pair space, same schemes, unsalted.
+    """
+    if _is_ccer(postings):
         return ccer_edge_weights(postings, scheme)
     scheme = scheme.upper()
 
@@ -266,7 +274,8 @@ def _chi_square(o11, o12, o21, o22):
 
 def comparison_propagation(postings: DataFrame) -> DataFrame:
     """Distinct comparisons across all blocks, no weighting
-    (ComparisonPropagation, comparison_cleaning.py:310-342)."""
+    (ComparisonPropagation, comparison_cleaning.py:310-342); D1 x D2
+    pairs on CCER postings (``block_building.block_pairs``)."""
     from .block_building import block_pairs
 
     return block_pairs(postings)
@@ -356,7 +365,9 @@ def cardinality_node_pruning(postings: DataFrame, scheme: str = "CBS",
     Per-node candidates are the full bidirectional neighborhood
     (node-centric _normalize_neighbor_entities, lines 259-263). Validity
     (_is_valid_comparison, 511-516): reciprocal pairs kept once (i<j),
-    one-directional pairs kept as-is (CNP) / dropped (RCNP).
+    one-directional pairs kept as-is (CNP) / dropped (RCNP). CCER
+    postings keep each pair oriented (id1 in D1, id2 in D2) instead of
+    i<j (``ccer._ccer_cnp``).
     """
     if k is None:
         # reference k = max(1, block_assignments / num_of_entities) with
@@ -365,6 +376,8 @@ def cardinality_node_pruning(postings: DataFrame, scheme: str = "CBS",
             num_entities = postings.select("eid").distinct().count()
         ba = postings.count()
         k = int(max(1.0, ba / num_entities))
+    if _is_ccer(postings):
+        return _ccer_cnp(edge_weights(postings, scheme), k, reciprocal)
     if k == 1:
         # top-1 fast path (the common Dirty-ER config: k = max(1,
         # ba/N) == 1 on web corpora): per-node best neighbor as a

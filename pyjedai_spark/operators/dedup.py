@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from ..functions import analysis as A
 from ..functions import text as T
 from ..functions.survivors import _best_members
-from .block_building import keep_multi_entity_blocks
+from .block_building import (block_pairs, block_pairs_salted,
+                             keep_multi_entity_blocks)
 
 P = T.MERSENNE_PRIME_ISH  # 4294967311, prime > 2^32
 
@@ -261,16 +262,8 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8,
         .localCheckpoint()
     b = _band_keys(sigs, bands, rows)
     if salted_chunk is not None:
-        from .block_building import block_pairs_salted
         return block_pairs_salted(b, chunk=salted_chunk)
-    if max_bucket is not None:
-        b = keep_multi_entity_blocks(b, 2, max_bucket)
-    a1 = b.select("key", F.col("eid").alias("id1"))
-    a2 = b.select("key", F.col("eid").alias("id2"))
-    return (
-        a1.join(a2, "key").where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2").distinct()
-    )
+    return block_pairs(b, max_block_size=max_bucket)
 
 
 def _make_inter_udf():

@@ -1114,7 +1114,7 @@ def q_ccer_wep_js(spark, sf_dir):
     from .operators import ccer as X
 
     d1, d2 = _ccer_inputs(spark, sf_dir)
-    e = X.ccer_wep(X.ccer_blocking(d1, d2), "JS")
+    e = CC.weighted_edge_pruning(X.ccer_blocking(d1, d2), "JS")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
@@ -1122,46 +1122,41 @@ def _ccer_postings(spark, sf_dir):
     from .operators import ccer as X
 
     d1, d2 = _ccer_inputs(spark, sf_dir)
-    return X, X.ccer_blocking(d1, d2)
+    return X.ccer_blocking(d1, d2)
 
 
 def q_ccer_wep_ejs(spark, sf_dir):
     """The reference's best published CCER configuration: WEP with the
     EJS scheme on the true D1 x D2 graph (workflow.py:696-716)."""
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_wep(p, "EJS")
+    e = CC.weighted_edge_pruning(_ccer_postings(spark, sf_dir), "EJS")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
 def q_ccer_wep_x2(spark, sf_dir):
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_wep(p, "X2")
+    e = CC.weighted_edge_pruning(_ccer_postings(spark, sf_dir), "X2")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
 def q_ccer_cnp_js(spark, sf_dir):
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_cnp(p, "JS")
+    e = CC.cardinality_node_pruning(_ccer_postings(spark, sf_dir), "JS")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
 def q_ccer_rcnp_cncbs(spark, sf_dir):
     """Reciprocal CNP with the reference's default CN-CBS scheme
     (incl. the dangling-else counter quirk) on the CCER graph."""
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_cnp(p, "CN-CBS", reciprocal=True)
+    e = CC.cardinality_node_pruning(_ccer_postings(spark, sf_dir), "CN-CBS",
+                                    reciprocal=True)
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
 def q_ccer_cep_js(spark, sf_dir):
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_cep(p, "JS")
+    e = CC.cardinality_edge_pruning(_ccer_postings(spark, sf_dir), "JS")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
 def q_ccer_blast_x2(spark, sf_dir):
-    X, p = _ccer_postings(spark, sf_dir)
-    e = X.ccer_blast(p, "X2")
+    e = CC.blast(_ccer_postings(spark, sf_dir), "X2")
     return e.select("id1", "id2", F.round("weight", 6).alias("weight"))
 
 
@@ -1172,14 +1167,12 @@ def q_ccer_best_chain(spark, sf_dir):
     Pair space thinned 8x (id1 % 8 = 0) between pruning and matching so
     the oracle's sequential UMC recursion stays tractable — every stage
     formula is still the flagship config's."""
-    from .operators import block_cleaning as BCL
     from .operators import ccer as X
 
     d1, d2 = _ccer_inputs(spark, sf_dir)
     docs = _docs(spark, sf_dir)
-    p = BCL.block_filtering(X.ccer_blocking(d1, d2), ratio=0.9,
-                            dirty=False).localCheckpoint()
-    pairs = X.ccer_wep(p, "EJS").select("id1", "id2")
+    p = BC.block_filtering(X.ccer_blocking(d1, d2), ratio=0.9).localCheckpoint()
+    pairs = CC.weighted_edge_pruning(p, "EJS").select("id1", "id2")
     pairs = pairs.where(F.col("id1") % 8 == 0).localCheckpoint()
     m = M.tfidf_cosine_matching(pairs, docs, tokenizer="char", qgram=3,
                                 similarity_threshold=0.0, round_to=6)
@@ -1192,7 +1185,8 @@ def _ccer_matches(spark, sf_dir):
 
     d1, d2 = _ccer_inputs(spark, sf_dir)
     docs = _docs(spark, sf_dir)
-    cands = X.ccer_wep(X.ccer_blocking(d1, d2), "JS").select("id1", "id2")
+    cands = CC.weighted_edge_pruning(X.ccer_blocking(d1, d2), "JS") \
+        .select("id1", "id2")
     cands = cands.localCheckpoint()
     return M.entity_matching(cands, docs, metric="cosine",
                              similarity_threshold=0.55, round_to=6)
@@ -1203,10 +1197,8 @@ def q_ccer_em_cosine(spark, sf_dir):
 
 
 def q_ccer_ccc(spark, sf_dir):
-    from .operators import ccer as X
-
     m = _ccer_matches(spark, sf_dir)
-    return X.ccc_size2(m.select("id1", "id2")).select(
+    return CL.connected_components_clustering(m, dirty=False).select(
         F.col("eid").alias("doc_id"), "cluster_id")
 
 

@@ -133,8 +133,8 @@ def schema_attribute_clusters(d1: DataFrame, d2: DataFrame,
                             max_values)
 
     p = X.ccer_blocking(a1, a2, id_col="aid", text_col="text")
-    p = BC.block_purging(p, purging_smoothing, dirty=False)
-    p = BC.block_filtering(p, filtering_ratio, dirty=False)
+    p = BC.block_purging(p, purging_smoothing)
+    p = BC.block_filtering(p, filtering_ratio)
     pairs = X.ccer_pairs(p)
     attrs = a1.withColumn("side", F.lit(1)).unionByName(
         a2.withColumn("side", F.lit(2)))
@@ -142,7 +142,7 @@ def schema_attribute_clusters(d1: DataFrame, d2: DataFrame,
         pairs, attrs, metric=metric,
         similarity_threshold=similarity_threshold,
         id_col="aid", text_col="text", round_to=6)
-    cc = X.ccc_size2(matches.select("id1", "id2"))
+    cc = CL.connected_components_clustering(matches, dirty=False)
 
     clustered = cc.select(F.col("eid").alias("aid"), "cluster_id")
     out = attrs.join(clustered, "aid", "left").select(
@@ -266,7 +266,7 @@ def schema_clustered_er(d1: DataFrame, d2: DataFrame,
         pairs_enc, docs_enc, metric=metric,
         similarity_threshold=similarity_threshold,
         id_col="enc", text_col=text_col, round_to=round_to)
-    cc = X.ccc_size2(matches.select("id1", "id2"))
+    cc = CL.connected_components_clustering(matches, dirty=False)
 
     node = cc.select(
         (F.col("eid") % _ENC).alias("eid"),
@@ -546,8 +546,8 @@ def rdf_subject_er(t1: DataFrame, t2: DataFrame, clusters: DataFrame,
     # WNP reference the kept postings multiple times)
     p = (p.join(keys, "key", "left_semi")
          .select("key", "eid", "side").localCheckpoint())
-    p = BC.block_filtering(p, filtering_ratio, dirty=False)
-    e = X.ccer_wnp(p, weighting_scheme)
+    p = BC.block_filtering(p, filtering_ratio)
+    e = CC.weighted_node_pruning(p, weighting_scheme)
 
     # per-cluster tf-idf over char q-grams (sklearn smooth-idf formula,
     # same as matching.tfidf_cosine_matching but with df and N scoped

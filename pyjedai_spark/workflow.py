@@ -14,6 +14,13 @@ Differences from the reference (deliberate, documented):
   materialization barrier (localCheckpoint / Iceberg checkpoint via
   CheckpointManager), not an in-memory dict;
 - evaluation is a semi-join count, never a python pair loop.
+
+The ER mode is read from the data, as in the reference
+(``is_dirty_er = dataset_2 is None``): ``run(d1, d2=d2)`` builds
+``ccer.ccer_blocking`` postings, whose ``side`` column makes every
+later stage (cleaning, pairs, meta-blocking) run on the D1 x D2 space
+with no mode flag; only connected components is told the mode, since
+match edges carry no ``side``.
 """
 
 from __future__ import annotations
@@ -134,7 +141,8 @@ class BlockingBasedWorkFlow:
         """Execute the workflow. Dirty-ER on one dataset; pass ``d2``
         for Clean-Clean ER — blocking, cleaning, meta-blocking and
         clustering then run on the true D1 x D2 space (entity ids must
-        be disjoint across the two inputs)."""
+        be disjoint across the two inputs). The CCER postings' ``side``
+        column carries the mode through cleaning and meta-blocking."""
         from .operators import ccer as X
 
         spark = docs.sparkSession
@@ -149,9 +157,6 @@ class BlockingBasedWorkFlow:
             n1 = docs.count()
             self.total_comparisons = (
                 n1 * d2.count() if is_ccer else n1 * (n1 - 1) // 2)
-
-        def stage_pairs(p):
-            return X.ccer_pairs(p) if is_ccer else BB.block_pairs(p)
 
         # block building
         t0 = time.time()
@@ -168,7 +173,8 @@ class BlockingBasedWorkFlow:
             fn = BLOCK_BUILDERS[bb["method"]]
             postings = ck.stage(spark, "blocking", lambda: fn(
                 docs, id_col=id_col, text_col=text_col, **bb.get("params", {})))
-        self._record(bb["method"], postings, stage_pairs(postings), gt, t0)
+        self._record(bb["method"], postings, BB.block_pairs(postings), gt,
+                     t0)
 
         # block cleaning (0..n)
         for step in self.block_cleaning or []:
@@ -177,8 +183,8 @@ class BlockingBasedWorkFlow:
             postings = ck.stage(
                 spark, step["method"],
                 lambda fn=fn, p=postings, s=step: fn(
-                    p, dirty=not is_ccer, **s.get("params", {})))
-            self._record(step["method"], postings, stage_pairs(postings),
+                    p, **s.get("params", {})))
+            self._record(step["method"], postings, BB.block_pairs(postings),
                          gt, t0)
 
         # comparison cleaning
@@ -186,17 +192,15 @@ class BlockingBasedWorkFlow:
         if self.comparison_cleaning:
             t0 = time.time()
             cc = dict(self.comparison_cleaning)
-            dispatch = (X.get_ccer_meta_blocking if is_ccer
-                        else CC.get_meta_blocking_approach)
             pairs = ck.stage(
                 spark, "comparison_cleaning",
-                lambda: dispatch(
+                lambda: CC.get_meta_blocking_approach(
                     cc["method"], postings, cc.get("params", {}).get("scheme"),
                     **{k: v for k, v in cc.get("params", {}).items()
                        if k != "scheme"}))
             self._record(cc["method"], pairs, pairs, gt, t0)
         else:
-            pairs = stage_pairs(postings)
+            pairs = BB.block_pairs(postings)
 
         # matching — docs projection spans BOTH datasets in CCER mode
         matches = None
@@ -228,16 +232,9 @@ class BlockingBasedWorkFlow:
                 edges = (matches if matches is not None
                          else pairs.withColumn("sim", F.lit(1.0)))
                 nodes = all_docs.select(F.col(id_col).alias("eid"))
-                if is_ccer:
-                    # CCER CC keeps only 2-element clusters
-                    # (clustering.py:466-467)
-                    thr = params.pop("similarity_threshold", None)
-                    if thr is not None:
-                        edges = edges.where(F.col("sim") > thr)
-                    result = X.ccc_size2(edges.select("id1", "id2"), nodes)
-                else:
-                    result = CL.connected_components_clustering(
-                        edges, nodes=nodes, **params)
+                # CCER keeps only 2-element clusters (clustering.py:466-467)
+                result = CL.connected_components_clustering(
+                    edges, nodes=nodes, dirty=not is_ccer, **params)
                 out_pairs = CL.clusters_to_pairs(result)
             else:
                 fn = CLUSTERERS[cl["method"]]

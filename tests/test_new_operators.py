@@ -153,13 +153,76 @@ def test_ccer_pair_space_is_cross_dataset_only(spark, docs):
         assert r["id1"] % 2 == 0 and r["id2"] % 2 == 1
 
 
+# two-sided postings (key, eid, side) with interleaved ids: side 1 holds
+# 10, 3, 7 and side 2 holds 1, 8, 5, so id order says nothing of side
+_CCER_POSTINGS = [
+    ("k1", 10, 1), ("k1", 3, 1), ("k1", 1, 2),
+    ("k2", 10, 1), ("k2", 1, 2), ("k2", 8, 2),
+    ("k3", 3, 1), ("k3", 8, 2), ("k3", 5, 2),
+    ("k4", 7, 1), ("k4", 5, 2),
+    ("k5", 7, 1), ("k5", 10, 1), ("k5", 5, 2), ("k5", 1, 2),
+    ("k6", 3, 1), ("k6", 1, 2),
+]
+
+
+def _py_ccer_wnp_cbs(rows, reciprocal):
+    """WNP over the D1 x D2 blocking graph in plain python: CBS edge
+    weights, keep an edge at or above the mean weight of one endpoint's
+    neighborhood (both endpoints when reciprocal)."""
+    blocks = {}
+    for key, eid, side in rows:
+        blocks.setdefault(key, {1: set(), 2: set()})[side].add(eid)
+    cbs = {}
+    for b in blocks.values():
+        for i in b[1]:
+            for j in b[2]:
+                cbs[(i, j)] = cbs.get((i, j), 0) + 1
+    nbh = {}
+    for (i, j), w in cbs.items():
+        nbh.setdefault(i, []).append(w)
+        nbh.setdefault(j, []).append(w)
+    avg = {n: sum(ws) / len(ws) for n, ws in nbh.items()}
+    keep = set()
+    for (i, j), w in cbs.items():
+        ok1, ok2 = w >= avg[i] - 1e-9, w >= avg[j] - 1e-9
+        if (ok1 and ok2) if reciprocal else (ok1 or ok2):
+            keep.add((i, j, float(w)))
+    return keep
+
+
+def test_ccer_meta_blocking_brute_force_and_orientation(spark):
+    """Meta-blocking reads the mode from the postings' side column:
+    WNP/RWNP(CBS) equal a plain-python computation on the D1 x D2
+    graph, and every method emits id1 from side 1 and id2 from side 2."""
+    from pyjedai_spark.operators import comparison_cleaning as CC
+
+    p = spark.createDataFrame(_CCER_POSTINGS,
+                              "key string, eid long, side int")
+    for acronym, reciprocal in (("WNP", False), ("RWNP", True)):
+        got = {(r["id1"], r["id2"], r["weight"]) for r in
+               CC.get_meta_blocking_approach(acronym, p, "CBS").collect()}
+        want = _py_ccer_wnp_cbs(_CCER_POSTINGS, reciprocal)
+        assert want and got == want, acronym
+    side1 = {e for _, e, s in _CCER_POSTINGS if s == 1}
+    side2 = {e for _, e, s in _CCER_POSTINGS if s == 2}
+    for acronym in ("CP", "WEP", "WNP", "RWNP", "BLAST", "CEP", "CNP",
+                    "RCNP"):
+        rows = CC.get_meta_blocking_approach(acronym, p).collect()
+        assert rows, acronym
+        for r in rows:
+            assert r["id1"] in side1 and r["id2"] in side2, (acronym, r)
+
+
 def test_ccer_ccc_keeps_only_size2(spark, docs):
-    from pyjedai_spark.operators import ccer as X
+    from pyjedai_spark.operators import clustering as CL
 
     edges = spark.createDataFrame(
         [(0, 1, 0.9), (2, 3, 0.9), (3, 4, 0.9)],
         "id1 long, id2 long, sim double")
-    out = X.ccc_size2(edges.select("id1", "id2"))
+    out = CL.connected_components_clustering(edges.select("id1", "id2"),
+                                             dirty=False)
+    # same column order as the Dirty-ER branch
+    assert out.columns == ["eid", "cluster_id"]
     got = {}
     for r in out.collect():
         got.setdefault(r["cluster_id"], set()).add(r["eid"])

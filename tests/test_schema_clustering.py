@@ -149,6 +149,7 @@ def test_batched_er_equals_looped(spark, two_tables):
     from pyjedai_spark.schema_clustering import (schema_attribute_clusters,
                                                  schema_clustered_er)
     from pyjedai_spark.operators import ccer as X
+    from pyjedai_spark.operators import clustering as CL
     from pyjedai_spark.operators import matching as M
 
     d1, d2 = two_tables
@@ -182,7 +183,8 @@ def test_batched_er_equals_looped(spark, two_tables):
         m = M.entity_matching(cand, both, metric="cosine",
                               similarity_threshold=0.5, id_col="eid",
                               text_col="text", round_to=6)
-        cc = X.ccc_size2(m.select("id1", "id2"))
+        cc = CL.connected_components_clustering(m.select("id1", "id2"),
+                                                dirty=False)
         sided = cc.join(sub.select(F.col("eid"), "side"), "eid")
         pair = (sided.groupBy("cluster_id")
                 .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
@@ -196,17 +198,26 @@ def test_batched_er_equals_looped(spark, two_tables):
 
 def test_clean_blocks_equals_purge_then_filter(spark, docs):
     """clean_blocks is a pure fusion: output-identical postings to the
-    two-stage chain, at every (smoothing, ratio) combo tried."""
+    two-stage chain, at every (smoothing, ratio) combo tried, in both
+    ER modes."""
     from pyjedai_spark.operators import block_building as BB
     from pyjedai_spark.operators import block_cleaning as BC
+    from pyjedai_spark.operators import ccer as X
 
-    p = BB.standard_blocking(docs.limit(300)).localCheckpoint()
-    for s, r in [(1.0, 0.8), (1.025, 0.5)]:
-        chain = BC.block_filtering(BC.block_purging(p, s), r)
-        fused = BC.clean_blocks(p, s, r)
-        a = {tuple(x) for x in chain.collect()}
-        b = {tuple(x) for x in fused.collect()}
-        assert a == b
+    sample = docs.limit(300)
+    dirty = BB.standard_blocking(sample).localCheckpoint()
+    # CCER postings: the side column alone selects the CCER cardinality
+    # (n1*n2) and the both-sides validity rule
+    ccer = X.ccer_blocking(sample.where("doc_id % 2 = 0"),
+                           sample.where("doc_id % 2 = 1")).localCheckpoint()
+    for p in (dirty, ccer):
+        for s, r in [(1.0, 0.8), (1.025, 0.5)]:
+            chain = BC.block_filtering(BC.block_purging(p, s), r)
+            fused = BC.clean_blocks(p, s, r)
+            assert fused.columns == chain.columns
+            a = {tuple(x) for x in chain.collect()}
+            b = {tuple(x) for x in fused.collect()}
+            assert a and a == b
 
 
 def test_clean_blocks_keep_size_matches_recount(spark, docs):

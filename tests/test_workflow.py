@@ -71,6 +71,32 @@ def test_ccer_workflow_connected_components_size2(spark):
     assert all(r["count"] == 2 for r in sizes)  # CCER CC keeps only pairs
 
 
+def test_ccer_workflow_connected_components_threshold_inclusive(spark):
+    """CCER connected components drops edges BELOW the threshold, as
+    the Dirty-ER branch does: a pair whose rounded sim equals the
+    threshold stays matched."""
+    d1 = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (2, "delta epsilon zeta eta")],
+        "eid long, text string")
+    d2 = spark.createDataFrame(
+        [(1, "alpha beta theta"), (3, "delta epsilon iota kappa")],
+        "eid long, text string")
+    wf = BlockingBasedWorkFlow(
+        entity_matching={"method": "entity_matching",
+                         "params": {"metric": "cosine"}},
+        # cosine(0, 1) = 2/3, rounded to 6 places; cosine(2, 3) = 0.5
+        clustering={"method": "connected_components",
+                    "params": {"similarity_threshold": 0.666667}},
+        name="ccer-ccc-threshold",
+    )
+    out = wf.run(d1, id_col="eid", d2=d2)
+    assert out.columns == ["eid", "cluster_id"]
+    got = {}
+    for r in out.collect():
+        got.setdefault(r["cluster_id"], set()).add(r["eid"])
+    assert sorted(sorted(v) for v in got.values()) == [[0, 1]]
+
+
 def test_progressive_workflow_reports_auc(spark):
     docs, gt = webtext_df(spark, n_docs=150, seed=19)
     pw = ProgressiveWorkFlow(budget=100, method="HB", scheme="CBS")
