@@ -9,7 +9,13 @@ neighborhood and the edge list is relabeled/deduped — the graph
 collapses toward one representative per component in O(log n) rounds,
 each round a bounded number of shuffles on a monotonically shrinking
 edge set. Lineage is truncated per round with localCheckpoint (SURVEY
-§4 item 3: no Catalyst support for fixpoints).
+§4 item 3: no Catalyst support for fixpoints). Each round first counts
+the contracted edge set; once it holds at most DRIVER_EDGE_LIMIT edges
+it is collected through Arrow and finished on the driver by a numpy
+union-find, whose labels become the last round's. Small graphs (every
+post-matching graph of the benchmarks) thus run no distributed round:
+each round is about a dozen Spark jobs, and at these sizes per-job
+latency, not task work, is the cost.
 
 Sequential greedy clusterers (UniqueMapping / Center / MergeCenter /
 BestMatch, clustering.py:477-791) are inherently order-dependent scans of
@@ -23,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 DRIVER_EDGE_LIMIT = 5_000_000
 
@@ -33,14 +40,53 @@ def _bidir(edges: DataFrame) -> DataFrame:
     )
 
 
+def _driver_labels(e: DataFrame) -> DataFrame:
+    """(u, m=component minimum) for every endpoint of the small edge set
+    ``e`` (u, v), computed on the driver by a vectorized union-find."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = e.toPandas()
+    ids, idx = np.unique(
+        np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()]),
+        return_inverse=True)
+    a, b = idx[:len(pdf)], idx[len(pdf):]
+    # ids is sorted, so a smaller index is a smaller id: hook the larger
+    # root of every edge spanning two trees onto the smaller one, then
+    # pointer-jump every node to its root, until no edge spans two
+    # trees. Roots only ever point down, so each tree ends rooted at
+    # its component minimum.
+    root = np.arange(len(ids))
+    while True:
+        ra, rb = root[a], root[b]
+        span = ra != rb
+        if not span.any():
+            break
+        np.minimum.at(root, np.maximum(ra, rb)[span],
+                      np.minimum(ra, rb)[span])
+        while (root[root] != root).any():
+            root = root[root]
+    f = e.schema["u"]
+    # one partition: the table is at most 2 x DRIVER_EDGE_LIMIT rows, and
+    # Arrow's defaultParallelism slices would each become an output file
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"u": ids, "m": ids[root]}),
+        StructType([f, StructField("m", f.dataType, f.nullable)])
+    ).coalesce(1)
+
+
 def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
                          max_iter: int = 50) -> DataFrame:
-    """(eid, cluster_id=min reachable id) via large-star/small-star.
+    """(eid, cluster_id=min reachable id) via min-label contraction.
 
-    large-star: every node connects its larger neighbors to the min of
-    its closed neighborhood; small-star: every node connects its smaller
-    neighbors (and itself) to that min. Alternating until fixpoint yields
-    stars rooted at component minima.
+    Each distributed round labels every node of the contracted graph
+    with the minimum of its closed neighborhood, pointer-jumps the
+    labels, and relabels/dedups the edge list. Once the contracted edge
+    set holds at most ``DRIVER_EDGE_LIMIT`` edges, it is collected and
+    finished on the driver in one step (:func:`_driver_labels`): below
+    that size each distributed round costs far more in per-job latency
+    than the collect does. A graph under the limit from the start never
+    runs a distributed round.
 
     ``nodes`` (one column ``eid``) adds singleton clusters for isolated
     entities.
@@ -65,8 +111,16 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     # previous shape) paid a full checkpoint job per round for data the
     # loop itself never reads.
     labs = []
+    complete = False
     for _ in range(max_iter):
-        if e.isEmpty():
+        n = e.count()
+        if n == 0:
+            break
+        if n <= DRIVER_EDGE_LIMIT:
+            # before any distributed round these labels already cover
+            # every graph node: no composition needed
+            complete = not labs
+            labs.append(_driver_labels(e))
             break
         # min label over the CLOSED neighborhood of the contracted graph
         closed = _bidir(e.select(F.col("u").alias("id1"), F.col("v").alias("id2"))).union(
@@ -117,13 +171,18 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
                 "rounds — raise max_iter (labels would be silently "
                 "wrong if returned)")
 
-    assign = graph_nodes.withColumn("label", F.col("eid"))
-    for lab in labs:
-        assign = (
-            assign.join(lab.withColumnRenamed("u", "label"), "label", "left")
-            .select("eid", F.coalesce("m", "label").alias("label"))
-        )
-    out = assign.select("eid", F.col("label").alias("cluster_id"))
+    if complete:
+        out = labs[0].select(F.col("u").alias("eid"),
+                             F.col("m").alias("cluster_id"))
+    else:
+        assign = graph_nodes.withColumn("label", F.col("eid"))
+        for lab in labs:
+            assign = (
+                assign.join(lab.withColumnRenamed("u", "label"), "label",
+                            "left")
+                .select("eid", F.coalesce("m", "label").alias("label"))
+            )
+        out = assign.select("eid", F.col("label").alias("cluster_id"))
     if nodes is not None:
         singles = nodes.select(F.col(nodes.columns[0]).alias("eid")).join(
             out.select("eid"), "eid", "left_anti"

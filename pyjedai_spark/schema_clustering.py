@@ -315,17 +315,20 @@ def schema_clustered_er_looped(d1: DataFrame, d2: DataFrame,
         s2 = docs2.join(sub.where(F.col("side") == 2).select(
             F.col("eid").alias(id_col)), id_col)
         res = wf.run(s1, id_col=id_col, text_col=text_col, d2=s2)
-        # workflow clustering output: (eid, cluster_id) components ->
-        # cross-side pairs (size-2 CCER components are one per side)
-        pair = (res.join(sub.withColumnRenamed("cluster_id", "_sc"), "eid")
-                .groupBy("cluster_id")
-                .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
-                     .alias("id1"),
-                     F.min(F.when(F.col("side") == 2, F.col("eid")))
-                     .alias("id2"))
-                .where(F.col("id1").isNotNull() & F.col("id2").isNotNull())
-                .select(F.lit(cid).alias("cluster_id"), "id1", "id2"))
-        outs.append(pair)
+        if "id1" not in res.columns:
+            # (eid, cluster_id) components -> cross-side pairs (size-2
+            # CCER components are one per side); pair-shaped clusterer
+            # output (unique mapping, best match) is already D1 x D2
+            res = (res.join(sub.withColumnRenamed("cluster_id", "_sc"),
+                            "eid")
+                   .groupBy("cluster_id")
+                   .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
+                        .alias("id1"),
+                        F.min(F.when(F.col("side") == 2, F.col("eid")))
+                        .alias("id2"))
+                   .where(F.col("id1").isNotNull()
+                          & F.col("id2").isNotNull()))
+        outs.append(res.select(F.lit(cid).alias("cluster_id"), "id1", "id2"))
     if not outs:
         return spark.createDataFrame(
             [], "cluster_id long, id1 long, id2 long")

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis as A
 from ..functions import urls as U
+from ..operators import clustering as CL
 from ..pipeline import _near_dup_status
 from .incremental_dedup import (_fs_exists, _near_dup_probe, _read_prior,
                                 _write_batch)
@@ -157,23 +158,13 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
     ndups = nmin.where(F.col("_m") < F.col("eid")).select(
         "eid", F.lit("near_dup").alias("status"),
         F.col("_m").alias("survivor")).localCheckpoint()
-    # in-batch pointer jumping: A(5)-B(7), B(7)-C(9) with no A-C edge
-    # gives C survivor 7, itself dropped this batch — forward through
-    # the in-batch map until fixpoint (ids strictly decrease, and
-    # self-application doubles path length per round: O(log chain))
-    while True:
-        fwd = ndups.select(F.col("eid").alias("survivor"),
-                           F.col("survivor").alias("_f"))
-        upd = ndups.join(fwd, "survivor", "left").select(
-            "eid", "status",
-            F.coalesce("_f", F.col("survivor")).alias("survivor")
-        ).localCheckpoint()
-        changed = upd.join(
-            ndups.select("eid", F.col("survivor").alias("_old")), "eid"
-        ).where(F.col("survivor") != F.col("_old")).count()
-        ndups = upd
-        if changed == 0:
-            break
+    # in-batch chains: A(5)-B(7), B(7)-C(9) with no A-C edge gives C
+    # survivor 7, itself dropped this batch. Every pointer goes to a
+    # smaller id, so each chain ends at its pointer component's minimum.
+    chains = CL.connected_components(
+        ndups.select(F.col("eid").alias("id1"), F.col("survivor").alias("id2")))
+    ndups = ndups.join(chains, "eid").select(
+        "eid", "status", F.col("cluster_id").alias("survivor"))
     drops.append(ndups)
     kept = d.select("eid").join(ndups.select("eid"), "eid", "left_anti") \
         .select("eid", F.lit("kept").alias("status"),
@@ -218,8 +209,6 @@ def reconcile_clean_state(spark, state_dir: str, out_dir: str) -> DataFrame:
     the same docs. At 10^12-doc scale this is the standard compaction
     job shape: edge store ≪ corpus, CC over survivors only.
     """
-    from ..operators import clustering as CL
-
     status = spark.read.option("basePath", out_dir).parquet(out_dir) \
         .drop("batch_id")
     passthrough = status.where(

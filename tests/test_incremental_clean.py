@@ -61,8 +61,12 @@ def test_incremental_clean_in_batch_chain(spark, tmp_path):
     assert got[10][0] == "kept"
     assert got[11][:2] == ("near_dup", 10)
     # c near-dups b but not a: survivor still resolves to the kept 10
-    if got[12][0] == "near_dup":
-        assert got[12][1] == 10
+    assert got[12][:2] == ("near_dup", 10)
+    edges_dir = os.path.join(str(tmp_path / "state"), "edges")
+    edges = {(r["id1"], r["id2"]) for r in
+             spark.read.parquet(edges_dir).collect()}
+    assert (11, 12) in edges or (12, 11) in edges
+    assert (10, 12) not in edges and (12, 10) not in edges
 
 
 def test_incremental_clean_stream_wiring(spark, tmp_path):

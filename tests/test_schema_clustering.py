@@ -196,6 +196,28 @@ def test_batched_er_equals_looped(spark, two_tables):
     assert batched == looped
 
 
+def test_looped_er_default_workflow(spark, two_tables):
+    """The per-cluster loop with its default workflow (best CCER, which
+    ends in unique mapping and so returns pairs, not components) yields
+    the 1-1 matches of every qualifying cluster."""
+    from pyjedai_spark.schema_clustering import (schema_attribute_clusters,
+                                                 schema_clustered_er_looped)
+
+    d1, d2 = two_tables
+    d2 = d2.withColumnRenamed("rid", "id")
+    clusters = schema_attribute_clusters(d1, d2, on="values", id_col="id",
+                                         metric="cosine",
+                                         similarity_threshold=0.35
+                                         ).localCheckpoint()
+    docs1 = d1.select("id", F.coalesce("name", F.lit("")).alias("text"))
+    docs2 = d2.select("id", F.coalesce("fullname", F.lit("")).alias("text"))
+    out = schema_clustered_er_looped(d1, d2, clusters, docs1, docs2,
+                                     id_col="id")
+    assert out.columns == ["cluster_id", "id1", "id2"]
+    got = {(r["id1"], r["id2"]) for r in out.collect()}
+    assert got == {(0, 10), (1, 12)}
+
+
 def test_clean_blocks_equals_purge_then_filter(spark, docs):
     """clean_blocks is a pure fusion: output-identical postings to the
     two-stage chain, at every (smoothing, ratio) combo tried, in both
