@@ -113,7 +113,7 @@ class CheckpointManager:
             "stage": stage,
             "format": self.fmt,
             "input_fingerprint": input_fingerprint,
-            "rows": int(out.count()),
+            "rows": sum(int(r["rows"]) for r in parts),
             "wall_s": round(time.time() - t0, 3),
             "partitions": [
                 {"pid": int(r["_pid"]), "rows": int(r["rows"]),

@@ -148,6 +148,74 @@ def extended_qgrams_blocking(docs: DataFrame, q: int = 6,
                                     max_block_size)
 
 
+# Blocks above this many postings are enumerated chunk pair by chunk
+# pair (BlockSplit, Kolb, Thor & Rahm, ICDE 2012). A plain key
+# self-join puts a block's whole bs^2/2 expansion into ONE join task
+# (AQE skew-split cannot fire: the input partition is tiny, the blowup
+# is at join output). 1024^2/2 pairs is the work of ~500 average
+# blocks, a balanced cutoff at any scale.
+SALT_BLOCK_SIZE = 1024
+
+
+def _block_pair_rows(p: DataFrame, entity_cols=(), block_cols=(),
+                     spread: bool = False) -> DataFrame:
+    """One row per (block, id1 < id2) pair of postings ``p`` (key, eid,
+    bs, ...): ``key``, ``id1``, ``id2``, each ``entity_cols`` column for
+    both sides (``<c>1``, ``<c>2``) and each ``block_cols`` column once.
+
+    Blocks of ``bs <= SALT_BLOCK_SIZE`` go through the plain key
+    self-join; ``spread`` first hashes its left side over
+    ``spark.sql.shuffle.partitions`` partitions by (key, id1), so a
+    broadcast join's output fans out even when ``p`` arrives in 1-2
+    partitions. Larger blocks are split into ``ceil(bs /
+    SALT_BLOCK_SIZE)`` hash chunks and enumerated per chunk pair
+    ``(c1 <= c2)``, each chunk pair its own task, so no task expands
+    more than ~SALT_BLOCK_SIZE^2 pairs however large the block.
+    """
+    def side(src, i):
+        return src.select("key", F.col("eid").alias(f"id{i}"),
+                          *[F.col(c).alias(f"{c}{i}") for c in entity_cols],
+                          *(block_cols if i == 1 else []))
+
+    n = int(p.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    small = p.where(F.col("bs") <= SALT_BLOCK_SIZE)
+    a = side(small, 1)
+    if spread:
+        a = a.repartition(n, "key", "id1")
+    plain = a.join(side(small, 2), "key").where(F.col("id1") < F.col("id2"))
+
+    hot = p.where(F.col("bs") > SALT_BLOCK_SIZE)
+    nc = F.ceil(F.col("bs") / F.lit(SALT_BLOCK_SIZE))
+    chunks = hot.groupBy(
+        "key", *block_cols,
+        F.pmod(F.xxhash64("eid"), nc).alias("c")
+    ).agg(F.collect_list(F.struct("eid", *entity_cols)).alias("m"))
+    cp = (
+        chunks.select("key", *block_cols, F.col("c").alias("c1"),
+                      F.col("m").alias("m1"))
+        .join(chunks.select("key", F.col("c").alias("c2"),
+                            F.col("m").alias("m2")), "key")
+        .where(F.col("c1") <= F.col("c2"))
+        # one task per chunk pair BEFORE the quadratic explode; the
+        # explicit count keeps AQE from coalescing the (tiny,
+        # pre-explode) chunk pairs back into one task
+        .repartition(n, "key", "c1", "c2")
+        .select("key", *block_cols, "c1", "c2",
+                F.explode("m1").alias("x"), "m2")
+        .select("key", *block_cols, "c1", "c2", "x",
+                F.explode("m2").alias("y"))
+        .where((F.col("c1") < F.col("c2")) | (F.col("x.eid") < F.col("y.eid")))
+    )
+    lo = F.col("x.eid") < F.col("y.eid")
+    s1 = F.when(lo, F.col("x")).otherwise(F.col("y"))
+    s2 = F.when(lo, F.col("y")).otherwise(F.col("x"))
+    split = cp.select(
+        "key", s1["eid"].alias("id1"),
+        *[s1[c].alias(f"{c}1") for c in entity_cols], *block_cols,
+        s2["eid"].alias("id2"), *[s2[c].alias(f"{c}2") for c in entity_cols])
+    return plain.unionByName(split)
+
+
 def block_pairs(postings: DataFrame,
                 max_block_size: int | None = None) -> DataFrame:
     """All distinct comparisons implied by a block collection, as an edge
@@ -156,68 +224,17 @@ def block_pairs(postings: DataFrame,
     collect_list + python combinations. CCER postings (a ``side``
     column) give the D1 x D2 pairs instead (``ccer.ccer_pairs``).
 
-    Scale note: the self-join shuffles both sides hash-partitioned by
-    ``key``; AQE skew-join splits a hot key's partitions. Upstream
-    purging/filtering/size-caps must bound the per-key quadratic blowup —
-    ``max_block_size`` is a belt-and-braces guard that *drops* keys whose
-    block size exceeds it (to keep a hot block, split it with
-    :func:`block_pairs_salted`).
+    Scale note: blocks above ``SALT_BLOCK_SIZE`` postings are split
+    into hash chunks and enumerated chunk pair by chunk pair
+    (:func:`_block_pair_rows`), so a hot block is kept and spread over
+    bounded tasks. ``max_block_size`` is a separate guard that *drops*
+    keys whose block size exceeds it.
     """
     if _is_ccer(postings):
         return ccer_pairs(postings)
-    p = postings
-    if max_block_size is not None:
-        p = keep_multi_entity_blocks(p, 2, max_block_size)
-    a = p.select(F.col("key"), F.col("eid").alias("id1"))
-    b = p.select(F.col("key"), F.col("eid").alias("id2"))
-    return (
-        a.join(b, "key")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
-
-
-def block_pairs_salted(postings: DataFrame, chunk: int = 1024) -> DataFrame:
-    """Same distinct (id1 < id2) pair set as :func:`block_pairs`, but with
-    skewed mega-blocks SPLIT across tasks instead of funneled through
-    one — the "salted repartitioning" of the north rule, for when a hot
-    block must be *kept* (vs the drop/cap guards).
-
-    Plan: each block's entities are hashed into ``ceil(size/chunk)``
-    sub-chunks (expected size ≈ ``chunk``); the quadratic enumeration
-    becomes a join of chunk-pairs ``(c1 <= c2)`` repartitioned on
-    ``(key, c1, c2)``, so no single task ever materializes more than
-    ~chunk² pairs regardless of block size. A 10^6-entity boilerplate
-    block (5·10^11 pairs) thus spreads over ~5·10^5 bounded tasks where
-    the plain self-join would hash every one of its rows to one
-    reducer (AQE skew-split can divide a join partition, but every
-    sub-partition still re-reads the full build side of the hot key).
-    """
-    sizes = postings.groupBy("key").agg(F.count("*").alias("_bs"))
-    p = (
-        postings.join(sizes, "key")
-        .where(F.col("_bs") >= 2)
-        .withColumn("_nc", F.ceil(F.col("_bs") / F.lit(chunk)).cast("int"))
-        .withColumn("_c", F.pmod(F.xxhash64("eid"), F.col("_nc")).cast("int"))
-    )
-    chunks = p.groupBy("key", "_c").agg(F.collect_list("eid").alias("_ids"))
-    left = chunks.select("key", F.col("_c").alias("c1"), F.col("_ids").alias("ids1"))
-    right = chunks.select("key", F.col("_c").alias("c2"), F.col("_ids").alias("ids2"))
-    cp = (
-        left.join(right, "key")
-        .where(F.col("c1") <= F.col("c2"))
-        # spread the hot key's chunk-pairs across the cluster BEFORE the
-        # quadratic explode — this repartition is the salt
-        .repartition("key", "c1", "c2")
-    )
-    return (
-        cp.select("c1", "c2", F.explode("ids1").alias("x"), "ids2")
-        .select("c1", "c2", "x", F.explode("ids2").alias("y"))
-        .where((F.col("c1") < F.col("c2")) | (F.col("x") < F.col("y")))
-        .select(F.least("x", "y").alias("id1"), F.greatest("x", "y").alias("id2"))
-        .distinct()
-    )
+    p = keep_multi_entity_blocks(postings.drop("bs"), 2, max_block_size,
+                                 keep_size=True)
+    return _block_pair_rows(p).select("id1", "id2").distinct()
 
 
 def block_stats(postings: DataFrame) -> DataFrame:

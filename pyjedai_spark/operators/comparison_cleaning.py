@@ -41,6 +41,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .block_building import _block_pair_rows, block_pairs
 from .ccer import _ccer_cnp, _is_ccer, ccer_edge_weights
 
 EPS = 1e-9
@@ -50,29 +51,16 @@ SN_SCHEMES = {"SN-CBS", "SNC", "SND", "SNJ"}
 NEEDS_CMP = {"EJS", "CNC", "SNC", "SND", "CND", "CNJ", "SNJ"}
 
 
-# blocks larger than this enumerate their pairs through the salted
-# (chunked) self-join: a bs^2 expansion inside ONE key otherwise lands
-# in ONE task (AQE skew-split can't fire — the INPUT partition is tiny,
-# the blowup is at join output), serializing the whole stage behind the
-# biggest block. 1024^2/2 pairs ≈ the work of ~500 average blocks — a
-# balanced cutoff at any scale.
-SALT_BS_THRESHOLD = 1024
-SALT_CHUNKS = 32
-
-
-def edge_weights(postings: DataFrame, scheme: str = "CBS",
-                 salt_threshold: int | None = SALT_BS_THRESHOLD,
-                 salt_chunks: int = SALT_CHUNKS) -> DataFrame:
+def edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
     """Blocking-graph edges (id1 < id2, weight) for a weighting scheme.
 
     One shuffle for the self-join on key, one for the groupBy(id1,id2);
     per-entity block counts ride the postings into the enumeration
     (attached pre-expansion), so no edge-stream-sized join follows.
-    Mega-blocks (size >= ``salt_threshold``) enumerate through a
-    chunk-salted join — the right side hashed into ``salt_chunks``
-    buckets, the left side replicated per bucket — so one hot key's
-    quadratic expansion spreads over ``salt_chunks`` tasks instead of
-    one. Output-identical; ``salt_threshold=None`` disables.
+    Pairs are enumerated by ``block_building._block_pair_rows``, which
+    splits every block above ``SALT_BLOCK_SIZE`` postings into hash
+    chunks enumerated chunk pair by chunk pair, so one hot key's
+    quadratic expansion spreads over bounded tasks instead of one.
 
     CCER postings (a ``side`` column) route to
     ``ccer.ccer_edge_weights``: edges (id1 in D1, id2 in D2) over the
@@ -90,10 +78,7 @@ def edge_weights(postings: DataFrame, scheme: str = "CBS",
     # meta-blocking (the edge stream is |pairs|-sized, everything else
     # entity-sized)
     need_block_cols = scheme in CN_SCHEMES or scheme in SN_SCHEMES
-    need_bs = need_block_cols or salt_threshold is not None
-    if not need_bs:
-        p = postings
-    elif "bs" in postings.columns:
+    if "bs" in postings.columns:
         # block sizes precomputed upstream (clean_blocks(keep_size=True)
         # retains the rebuilt size) — skip the groupBy + per-key join,
         # one full exchange of the postings saved
@@ -128,35 +113,8 @@ def edge_weights(postings: DataFrame, scheme: str = "CBS",
     # 4-7s single-task stages at sf0.1). Re-spreading the tiny
     # entity-level stream side first costs one exchange of |postings|
     # rows and restores full fan-out however the join executes.
-    n_out = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    def enumerate_pairs(src):
-        a = src.select("key", F.col("eid").alias("id1"),
-                       F.col("nb").alias("nb1"), *block_cols) \
-            .repartition(n_out, "key", "id1")
-        b = src.select("key", F.col("eid").alias("id2"),
-                       F.col("nb").alias("nb2"))
-        return a.join(b, "key").where(F.col("id1") < F.col("id2"))
-
-    def enumerate_pairs_salted(src):
-        a = src.select(
-            "key", F.col("eid").alias("id1"), F.col("nb").alias("nb1"),
-            *block_cols
-        ).repartition(n_out).withColumn("_cb", F.explode(F.sequence(
-            F.lit(0), F.lit(salt_chunks - 1))))
-        b = src.select(
-            "key", F.col("eid").alias("id2"), F.col("nb").alias("nb2"),
-            F.pmod(F.xxhash64("eid"), F.lit(salt_chunks)).alias("_cb"))
-        return (a.join(b, ["key", "_cb"])
-                .where(F.col("id1") < F.col("id2"))
-                .drop("_cb"))
-
-    if salt_threshold is None:
-        pairs = enumerate_pairs(p)
-    else:
-        pairs = enumerate_pairs(p.where(F.col("bs") < salt_threshold)) \
-            .unionByName(enumerate_pairs_salted(
-                p.where(F.col("bs") >= salt_threshold)))
+    pairs = _block_pair_rows(p, entity_cols=("nb",), block_cols=block_cols,
+                             spread=True)
 
     # counter accumulation, incl. the CN/SN dangling-else quirk
     # (comparison_cleaning.py:376-385); nb1/nb2 are constant per pair,
@@ -276,8 +234,6 @@ def comparison_propagation(postings: DataFrame) -> DataFrame:
     """Distinct comparisons across all blocks, no weighting
     (ComparisonPropagation, comparison_cleaning.py:310-342); D1 x D2
     pairs on CCER postings (``block_building.block_pairs``)."""
-    from .block_building import block_pairs
-
     return block_pairs(postings)
 
 

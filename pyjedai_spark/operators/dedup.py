@@ -18,7 +18,9 @@ Scale design:
 - candidates come from groupBy(band) / groupBy(chunk) shuffles whose
   fan-out is bounded by band width, never an n^2 cross join;
 - hot buckets (boilerplate pages) are size-capped before pair
-  explosion, mirroring size-capped block purging (north rule).
+  explosion, mirroring size-capped block purging (north rule); an
+  uncapped bucket above ``block_building.SALT_BLOCK_SIZE`` rows is
+  split into hash chunks and enumerated chunk pair by chunk pair.
 """
 
 from __future__ import annotations
@@ -32,8 +34,7 @@ from pyspark.sql import functions as F
 from ..functions import analysis as A
 from ..functions import text as T
 from ..functions.survivors import _best_members
-from .block_building import (block_pairs, block_pairs_salted,
-                             keep_multi_entity_blocks)
+from .block_building import block_pairs, keep_multi_entity_blocks
 
 P = T.MERSENNE_PRIME_ISH  # 4294967311, prime > 2^32
 
@@ -221,36 +222,17 @@ def _band_keys(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
         "eid")
 
 
-_MAX_BUCKET_DEFAULT = object()  # sentinel: distinguishes "caller left the
-# default" from "caller explicitly asked for a bucket cap"
-
-
 def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8,
                         rows: int | None = None, shingle_size: int = 1,
                         id_col: str = "doc_id", text_col: str = "text",
-                        max_bucket=_MAX_BUCKET_DEFAULT,
-                        salted_chunk: int | None = None) -> DataFrame:
+                        max_bucket: int | None = 1000) -> DataFrame:
     """MinHash-LSH candidate pairs (id1<id2, distinct): docs agreeing on
     at least one full band. ``max_bucket`` size-caps hot buckets
     (boilerplate shingle sets) before the within-bucket self-join —
-    the size-capped mega-block guard of the north rule. When a hot
-    bucket must be KEPT instead of dropped, pass ``salted_chunk``:
-    pair enumeration routes through
-    :func:`..block_building.block_pairs_salted`, which splits each
-    bucket's quadratic work into bounded ~chunk² tasks (identical
-    output, skew-proof plan). ``max_bucket`` (default 1000; the salted
-    path defaults to uncapped) and ``salted_chunk`` are mutually
-    exclusive — passing both explicitly raises, because the salted
-    branch keeps every bucket and silently ignoring the cap would
-    change the output contract."""
-    if salted_chunk is not None and max_bucket is not _MAX_BUCKET_DEFAULT \
-            and max_bucket is not None:
-        raise ValueError(
-            "max_bucket and salted_chunk are mutually exclusive: the salted "
-            "path enumerates ALL buckets (split into bounded chunks); pass "
-            "max_bucket=None with salted_chunk, or drop salted_chunk to cap")
-    if max_bucket is _MAX_BUCKET_DEFAULT:
-        max_bucket = None if salted_chunk is not None else 1000
+    the size-capped mega-block guard of the north rule. ``None`` keeps
+    every bucket: :func:`..block_building.block_pairs` splits each
+    bucket above ``SALT_BLOCK_SIZE`` rows into hash chunks enumerated
+    chunk pair by chunk pair (identical output, skew-proof plan)."""
     rows = rows or k // bands
     # Materialize the signature table ONCE. The band-key table feeds
     # both self-join sides, and each un-materialized reference would
@@ -261,8 +243,6 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 32, bands: int = 8,
     sigs = minhash_signatures(docs, k, shingle_size, id_col, text_col) \
         .localCheckpoint()
     b = _band_keys(sigs, bands, rows)
-    if salted_chunk is not None:
-        return block_pairs_salted(b, chunk=salted_chunk)
     return block_pairs(b, max_block_size=max_bucket)
 
 

@@ -111,9 +111,9 @@ def corpus_clean_pipeline(docs: DataFrame, id_col: str = "doc_id",
     ``max_bucket`` defaults BOUNDED (1000): at crawl scale one
     boilerplate band-hash bucket with 10^8 members would otherwise
     enumerate ~10^16 pairs. Pass ``max_bucket=None`` for exact
-    (uncapped) enumeration at test scale, or route hot buckets through
-    the salted enumerator via ``lsh_candidate_pairs(salted_chunk=...)``
-    when capped recall loss is unacceptable.
+    (uncapped) enumeration when capped recall loss is unacceptable:
+    buckets above ``block_building.SALT_BLOCK_SIZE`` rows are then
+    split into hash chunks and enumerated chunk pair by chunk pair.
 
     ``ranks`` (optional, (id_col, rank_col) numeric): tiered survivor
     policy end-to-end — every dedup stage (url groups, exact groups,

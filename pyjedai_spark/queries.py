@@ -457,12 +457,12 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 
 def q_minhash_lsh_pairs_salted(spark, sf_dir):
-    """Same pair set as minhash_lsh_pairs, enumerated via the salted
-    mega-block splitter (chunk=32 at test scale forces multi-chunk
-    blocks, proving the skew-proof path is output-identical)."""
+    """The same call as minhash_lsh_pairs: hot buckets are split
+    automatically (``block_building.SALT_BLOCK_SIZE``); the tests pin
+    the split route's output to the plain self-join's with the constant
+    set low enough that real buckets split."""
     return DD.lsh_candidate_pairs(_docs(spark, sf_dir), k=32, bands=8,
-                                  shingle_size=3, max_bucket=None,
-                                  salted_chunk=32)
+                                  shingle_size=3, max_bucket=None)
 
 
 def q_minhash_near_dup(spark, sf_dir):

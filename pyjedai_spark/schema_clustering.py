@@ -293,17 +293,20 @@ def schema_clustered_er_looped(d1: DataFrame, d2: DataFrame,
                                docs1: DataFrame, docs2: DataFrame,
                                workflow=None,
                                id_col: str = "doc_id",
+                               id_col2: str | None = None,
                                text_col: str = "text") -> DataFrame:
     """Reference-faithful per-cluster loop (clustering.py:255-273): run
     a full BlockingBasedWorkFlow per qualifying cluster and union the
     resulting pairs. Use when the workflow has per-dataset scalar
     stages (purge thresholds, greedy UMC) that cannot be batched; the
     cluster count is attribute-bounded, so the loop is driver-cheap
-    even at web scale."""
+    even at web scale. ``id_col2`` keys ``d2``/``docs2`` (default
+    ``id_col``); the workflow sees both sides keyed by ``id_col``."""
     from .workflow import BlockingBasedWorkFlow
 
     wf = workflow or BlockingBasedWorkFlow.best_ccer()
-    mem = cluster_member_rows(d1, d2, clusters, id_col).localCheckpoint()
+    id2 = id_col2 or id_col
+    mem = cluster_member_rows(d1, d2, clusters, id_col, id2).localCheckpoint()
     cids = [r["cluster_id"]
             for r in mem.select("cluster_id").distinct().collect()]
     spark = d1.sparkSession
@@ -313,7 +316,7 @@ def schema_clustered_er_looped(d1: DataFrame, d2: DataFrame,
         s1 = docs1.join(sub.where(F.col("side") == 1).select(
             F.col("eid").alias(id_col)), id_col)
         s2 = docs2.join(sub.where(F.col("side") == 2).select(
-            F.col("eid").alias(id_col)), id_col)
+            F.col("eid").alias(id2)), id2).withColumnRenamed(id2, id_col)
         res = wf.run(s1, id_col=id_col, text_col=text_col, d2=s2)
         if "id1" not in res.columns:
             # (eid, cluster_id) components -> cross-side pairs (size-2

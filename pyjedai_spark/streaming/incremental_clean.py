@@ -32,9 +32,10 @@ the content fingerprint (``analysis.doc_fingerprint``) and the
 kept/near_dup labeller (``pipeline._near_dup_status``, used by the
 reconciliation).
 
-State = six ``batch_id=N``-partitioned parquet stores (urls,
-fingerprints, LSH bands, doc texts, survivor pointers, verified
-near-dup edges), written by incremental_dedup's ``_write_batch`` and
+State = five ``batch_id=N``-partitioned parquet stores (urls,
+fingerprints, LSH bands, doc texts, verified near-dup edges) plus the
+status output itself, whose non-kept rows are the survivor pointers;
+all written by incremental_dedup's ``_write_batch`` and
 probed by its ``_near_dup_probe`` — the same table-as-state design and
 the same band → strictly-prior bands → self-join → verify probe as
 ``process_increment``: per-batch OVERWRITE partitions + strictly-prior
@@ -97,7 +98,7 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
     ).localCheckpoint()
 
     p = {n: os.path.join(state_dir, n)
-         for n in ("urls", "fps", "bands", "docs", "surv", "edges")}
+         for n in ("urls", "fps", "bands", "docs", "edges")}
     drops = []
 
     if url_col:
@@ -135,8 +136,8 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
                               "eid", "text")
     ver = ver.localCheckpoint()
 
-    # survivor resolution: map every matched neighbor through the
-    # survivor-pointer store (a dropped neighbor forwards to its kept
+    # survivor resolution: map every matched neighbor through the prior
+    # statuses' survivor pointers (a dropped neighbor forwards to its kept
     # canonical; kept/unknown neighbors map to themselves), then take
     # the min resolved survivor per batch doc. First-seen: a doc that
     # only matches LATER in-batch ids (min resolved == itself) stays
@@ -145,10 +146,14 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
         .unionByName(ver.select(F.col("id2").alias("eid"),
                                 F.col("id1").alias("nb")))
     batch_edges = edges.join(d.select("eid"), "eid")
-    prior_surv = _read_prior(spark, p["surv"], batch_id)
-    if prior_surv is not None:
-        ptr = prior_surv.select(F.col("eid").alias("nb"),
-                                F.col("survivor").alias("_fwd"))
+    # every non-kept doc that HAS a canonical (url/exact/near dups —
+    # low_quality has none) points at it
+    prior_out = _read_prior(spark, out_dir, batch_id)
+    if prior_out is not None:
+        ptr = prior_out.where((F.col("status") != "kept")
+                              & F.col("survivor").isNotNull()) \
+            .select(F.col("eid").alias("nb"),
+                    F.col("survivor").alias("_fwd"))
         batch_edges = batch_edges.join(ptr, "nb", "left")
     else:
         batch_edges = batch_edges.withColumn("_fwd", F.lit(None).cast("long"))
@@ -181,11 +186,6 @@ def process_clean_increment(new_docs: DataFrame, state_dir: str,
     _write_batch(ekeep, p["fps"], batch_id)
     _write_batch(nb, p["bands"], batch_id)
     _write_batch(d.select("eid", "text"), p["docs"], batch_id)
-    # survivor pointers for every non-kept doc that HAS a canonical
-    # (url/exact/near dups — low_quality has none)
-    _write_batch(out.where(F.col("status") != "kept").where(
-        F.col("survivor").isNotNull()).select("eid", "survivor"),
-        p["surv"], batch_id)
     # verified near-dup edges touching this batch — the raw material the
     # periodic reconciliation replays through global CC (pointer stores
     # alone lose bridge edges: a doc matching two kept docs records only

@@ -276,26 +276,50 @@ def test_ivf_topk_all_probes_equals_exact(spark):
     assert any((r["query_id"], r["neighbor_id"]) in exact_pairs for r in sub)
 
 
-def test_salted_pairs_identical_to_self_join(spark, docs):
-    """block_pairs_salted must reproduce block_pairs bit-for-bit while
-    bounding per-task work; chunk=4 forces every real block through the
-    multi-chunk path (cross-chunk AND intra-chunk branches)."""
+def test_salted_pairs_identical_to_self_join(spark, docs, monkeypatch):
+    """Splitting hot blocks must reproduce the plain self-join's pair
+    set bit-for-bit; SALT_BLOCK_SIZE=4 sends every real block above 4
+    postings through the multi-chunk route (cross-chunk AND intra-chunk
+    pairs) while smaller blocks stay on the plain route."""
     p = BB.standard_blocking(docs.limit(150))
     plain = sorted((r["id1"], r["id2"]) for r in BB.block_pairs(p).collect())
+    monkeypatch.setattr(BB, "SALT_BLOCK_SIZE", 4)
+    assert p.groupBy("key").count().where("count > 4").count() > 0
     salted = sorted((r["id1"], r["id2"])
-                    for r in BB.block_pairs_salted(p, chunk=4).collect())
+                    for r in BB.block_pairs(p).collect())
     assert plain == salted and len(plain) > 0
 
 
-def test_salted_lsh_candidates_identical(spark, docs):
+def test_salted_lsh_candidates_identical(spark, docs, monkeypatch):
     from pyjedai_spark.operators import dedup as DD
     sample = docs.limit(120)
     plain = sorted((r["id1"], r["id2"]) for r in DD.lsh_candidate_pairs(
         sample, k=32, bands=8, shingle_size=3, max_bucket=None).collect())
+    # band buckets hold a handful of rows: 1 splits every one of them
+    monkeypatch.setattr(BB, "SALT_BLOCK_SIZE", 1)
     salted = sorted((r["id1"], r["id2"]) for r in DD.lsh_candidate_pairs(
-        sample, k=32, bands=8, shingle_size=3, max_bucket=None,
-        salted_chunk=3).collect())
+        sample, k=32, bands=8, shingle_size=3, max_bucket=None).collect())
     assert plain == salted and len(plain) > 0
+
+
+def test_pair_in_plain_and_split_block(spark, monkeypatch):
+    """A pair sharing one block on each route: block_pairs returns it
+    once, and edge_weights counts both shared blocks with the same JS
+    weight as the unsplit run."""
+    from pyjedai_spark.operators import comparison_cleaning as CC
+
+    p = spark.createDataFrame(
+        [("a", 1), ("a", 2)] + [("b", e) for e in range(1, 7)]
+        + [("c", 3), ("c", 4)], "key string, eid long")
+    unsplit = {(r["id1"], r["id2"]): (r["weight"], r["cbs"])
+               for r in CC.edge_weights(p, "JS").collect()}
+    monkeypatch.setattr(BB, "SALT_BLOCK_SIZE", 2)  # a, c plain; b split
+    assert [tuple(r) for r in BB.block_pairs(p).where(
+        "id1 = 1 AND id2 = 2").collect()] == [(1, 2)]
+    split = {(r["id1"], r["id2"]): (r["weight"], r["cbs"])
+             for r in CC.edge_weights(p, "JS").collect()}
+    assert split[(1, 2)] == unsplit[(1, 2)] == (1.0, 2.0)
+    assert split == unsplit and len(split) == 15
 
 
 def test_line_dedup_semantics(spark):

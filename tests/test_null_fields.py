@@ -100,16 +100,6 @@ def test_corpus_clean_labels_every_doc_exactly_once(spark):
     assert labels[3] == "near_dup"
 
 
-def test_lsh_candidate_pairs_rejects_cap_plus_salt(spark):
-    from pyjedai_spark.operators.dedup import lsh_candidate_pairs
-
-    docs = _corpus(spark).where(F.col("text").isNotNull())
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        lsh_candidate_pairs(docs, max_bucket=500, salted_chunk=32)
-    # default cap with salting is fine (salted path, uncapped)
-    lsh_candidate_pairs(docs, salted_chunk=32).count()
-
-
 def test_per_key_top_n_rejects_non_string_ord(spark):
     from pyjedai_spark.operators.sampling import per_key_top_n
 

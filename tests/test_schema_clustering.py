@@ -204,15 +204,14 @@ def test_looped_er_default_workflow(spark, two_tables):
                                                  schema_clustered_er_looped)
 
     d1, d2 = two_tables
-    d2 = d2.withColumnRenamed("rid", "id")
     clusters = schema_attribute_clusters(d1, d2, on="values", id_col="id",
-                                         metric="cosine",
+                                         id_col2="rid", metric="cosine",
                                          similarity_threshold=0.35
                                          ).localCheckpoint()
     docs1 = d1.select("id", F.coalesce("name", F.lit("")).alias("text"))
-    docs2 = d2.select("id", F.coalesce("fullname", F.lit("")).alias("text"))
+    docs2 = d2.select("rid", F.coalesce("fullname", F.lit("")).alias("text"))
     out = schema_clustered_er_looped(d1, d2, clusters, docs1, docs2,
-                                     id_col="id")
+                                     id_col="id", id_col2="rid")
     assert out.columns == ["cluster_id", "id1", "id2"]
     got = {(r["id1"], r["id2"]) for r in out.collect()}
     assert got == {(0, 10), (1, 12)}
@@ -272,21 +271,24 @@ def test_edge_weights_precomputed_bs_equals_recomputed(spark, docs):
     assert with_bs == without
 
 
-def test_edge_weights_salted_equals_plain(spark, docs):
-    """Chunk-salted mega-block enumeration is output-identical to the
+def test_edge_weights_salted_equals_plain(spark, docs, monkeypatch):
+    """Chunk-split hot-block enumeration is output-identical to the
     plain self-join for every scheme family (counter aggregation order
-    must not matter), at a threshold low enough that real blocks split."""
+    must not matter), at a SALT_BLOCK_SIZE low enough that real blocks
+    split."""
     from pyjedai_spark.operators import block_building as BB
     from pyjedai_spark.operators import comparison_cleaning as CC
 
     p = BB.standard_blocking(docs.limit(200)).localCheckpoint()
+    assert p.groupBy("key").count().where("count > 4").count() > 0
     for scheme in ["JS", "CN-CBS", "SN-CBS", "ECBS"]:
         plain = {(r["id1"], r["id2"]): (round(r["weight"], 9), r["cbs"])
-                 for r in CC.edge_weights(p, scheme,
-                                          salt_threshold=None).collect()}
-        salted = {(r["id1"], r["id2"]): (round(r["weight"], 9), r["cbs"])
-                  for r in CC.edge_weights(p, scheme, salt_threshold=4,
-                                           salt_chunks=5).collect()}
+                 for r in CC.edge_weights(p, scheme).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(BB, "SALT_BLOCK_SIZE", 4)
+            salted = {(r["id1"], r["id2"]): (round(r["weight"], 9),
+                                             r["cbs"])
+                      for r in CC.edge_weights(p, scheme).collect()}
         assert plain == salted, scheme
 
 
