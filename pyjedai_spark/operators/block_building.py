@@ -22,10 +22,23 @@ from .ccer import _is_ccer, ccer_pairs
 
 
 def _postings(docs: DataFrame, keys_col, id_col: str) -> DataFrame:
-    """docs + an array<string> key expression -> (key, eid) postings."""
+    """docs + an array<string> key expression -> distinct (key, eid)
+    postings, hash-partitioned by key and sorted by (key, eid).
+
+    Duplicates are dropped by a row_number over that sort, not by a
+    distinct, so the per-key window of :func:`keep_multi_entity_blocks`
+    after it needs no second exchange and no second sort. A distinct
+    after the key exchange would also save the exchange, but its two
+    hash maps and the window's sort would share one task, tripling the
+    task's peak execution memory.
+    """
+    first = Window.partitionBy("key", "eid").orderBy("eid")
     return (
         docs.select(F.col(id_col).alias("eid"), F.explode(keys_col).alias("key"))
-        .distinct()
+        .repartition("key")
+        .withColumn("_rn", F.row_number().over(first))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 

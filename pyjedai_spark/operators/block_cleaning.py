@@ -9,6 +9,7 @@ column (``ccer.ccer_blocking``) get CCER cardinalities and validity.
 from __future__ import annotations
 
 import math
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -62,28 +63,15 @@ def purging_threshold(levels: list[tuple[int, float, float]],
 
 def _scan_threshold(cards: DataFrame, smoothing_factor: float) -> float:
     """Level-table collect + driver-side scan over an existing
-    cardinality frame (the O(#levels) piece of BlockPurging)."""
-    levels = (
-        cards.groupBy("cardinality")
-        .agg(F.sum("block_size").alias("bs"), F.sum("cardinality").alias("cc"))
-        .withColumn(
-            "cum_bs",
-            F.sum("bs").over(
-                Window.orderBy("cardinality").rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .withColumn(
-            "cum_cc",
-            F.sum("cc").over(
-                Window.orderBy("cardinality").rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .orderBy("cardinality")
-        .select("cardinality", "cum_bs", "cum_cc")
-        .collect()
-    )
-    return purging_threshold([(r[0], r[1], r[2]) for r in levels],
-                             smoothing_factor)
+    cardinality frame (the O(#levels) piece of BlockPurging): one row
+    per cardinality level, cumulated on the driver."""
+    levels = sorted(tuple(r) for r in cards.groupBy("cardinality").agg(
+        F.sum("block_size"), F.sum("cardinality")).collect())
+    cum_bs = accumulate(lv[1] for lv in levels)
+    cum_cc = accumulate(lv[2] for lv in levels)
+    return purging_threshold(
+        [(lv[0], b, c) for lv, b, c in zip(levels, cum_bs, cum_cc)],
+        smoothing_factor)
 
 
 def block_purging(postings: DataFrame,
@@ -91,9 +79,9 @@ def block_purging(postings: DataFrame,
     """Drop blocks whose cardinality exceeds the scanned threshold
     (BlockPurging, block_cleaning.py:110-207).
 
-    Plan: groupBy(key) -> groupBy(cardinality) level agg -> cumulative
-    window over the (tiny) level table -> collect scalar -> filter. The
-    only driver-side piece is the O(#levels) threshold scan.
+    Plan: groupBy(key) -> groupBy(cardinality) level agg -> collect the
+    (tiny) level table -> cumulative sums and threshold scan on the
+    driver -> filter.
     """
     cards = block_cardinalities(postings)
     thr = _scan_threshold(cards, smoothing_factor)

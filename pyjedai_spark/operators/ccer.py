@@ -17,9 +17,10 @@ from its data (``is_dirty_er = dataset_2 is None``, datamodel.py:114):
 with a ``side`` column is CCER (:func:`_is_ccer`). Block cleaning,
 ``block_building.block_pairs`` and every meta-blocking method in
 ``comparison_cleaning`` read the mode from it and route here for what
-differs: the D1 x D2 pairs, the CCER counters
-(:func:`ccer_edge_weights`) and CNP's side-flag orientation
-(:func:`_ccer_cnp`). Pruning rules and weight formulas exist once.
+differs: the D1 x D2 pairs and the CCER counters
+(:func:`ccer_edge_weights`). CNP orients its pairs by side in
+``comparison_cleaning.cardinality_node_pruning``. Pruning rules and
+weight formulas exist once.
 
 Spark shape: one postings DataFrame (key, eid, side) for both datasets
 — candidate pairs are a side-1 x side-2 join within key, so Catalyst
@@ -90,8 +91,8 @@ def ccer_edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
     ``comparison_cleaning.edge_weights`` on ``side``-carrying postings.
     Returns (id1 in D1, id2 in D2, weight, cbs).
     """
-    from .comparison_cleaning import (CN_SCHEMES, NEEDS_CMP, SN_SCHEMES,
-                                      _weight_expr)
+    from .comparison_cleaning import (CN_SCHEMES, COLUMNS, NEEDS_CMP,
+                                      SN_SCHEMES, _weight_expr)
 
     scheme = scheme.upper()
     cn = scheme in CN_SCHEMES
@@ -149,47 +150,8 @@ def ccer_edge_weights(postings: DataFrame, scheme: str = "CBS") -> DataFrame:
         d_total = float(dp.count())
         e = e.join(cmp1, "id1").join(cmp2, "id2")
 
-    w = _weight_expr(scheme, F.col("counter"), F.col("nb1"), F.col("nb2"),
-                     num_blocks, d_total)
+    w = _weight_expr(COLUMNS, scheme, F.col("counter"), F.col("nb1"),
+                     F.col("nb2"), F.col("cmp1"), F.col("cmp2"), num_blocks,
+                     d_total)
     return e.select("id1", "id2", w.cast("double").alias("weight"),
                     F.col("cbs").cast("double").alias("cbs"))
-
-
-def _ccer_cnp(e: DataFrame, k: int, reciprocal: bool) -> DataFrame:
-    """CNP's validity and orientation step on CCER edges ``e`` (id1 in
-    D1, id2 in D2, weight): per-node top-k cross-side neighbors; RCNP
-    keeps only reciprocal pairs. Called by
-    ``comparison_cleaning.cardinality_node_pruning``; the Dirty-ER body
-    orients by least/greatest, which interleaved CCER ids break, so the
-    orientation here is a side flag. Output stays (id1 in D1, id2 in
-    D2)."""
-    bidir = e.select(F.col("id1").alias("u"), F.col("id2").alias("v"),
-                     F.lit(1).alias("u_side"), "weight").union(
-        e.select(F.col("id2").alias("u"), F.col("id1").alias("v"),
-                 F.lit(2).alias("u_side"), "weight")
-    )
-    w_rank = Window.partitionBy("u").orderBy(F.col("weight").desc(),
-                                             F.col("v").desc())
-    nearest = bidir.withColumn("_rn", F.row_number().over(w_rank)).where(
-        F.col("_rn") <= k
-    ).select("u", "v", "u_side", "weight")
-
-    fwd = nearest
-    rev = nearest.select(F.col("u").alias("v"), F.col("v").alias("u")).withColumn(
-        "_has_rev", F.lit(1)
-    )
-    joined = fwd.join(rev, ["u", "v"], "left")
-    if reciprocal:
-        # each reciprocal pair appears twice (once per direction); keep
-        # the D1-oriented copy
-        valid = joined.where(F.col("_has_rev").isNotNull()
-                             & (F.col("u_side") == 1))
-    else:
-        valid = joined.where(F.col("_has_rev").isNull()
-                             | (F.col("u_side") == 1))
-    oriented = valid.select(
-        F.when(F.col("u_side") == 1, F.col("u")).otherwise(F.col("v")).alias("id1"),
-        F.when(F.col("u_side") == 1, F.col("v")).otherwise(F.col("u")).alias("id2"),
-        "weight",
-    )
-    return oriented.groupBy("id1", "id2").agg(F.max("weight").alias("weight"))

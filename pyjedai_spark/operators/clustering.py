@@ -31,6 +31,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+# Graphs of at most this many edges finish on the driver in numpy; two
+# layers use it. Here it bounds the contracted edge set that connected
+# components collects. In comparison_cleaning it bounds both the
+# postings rows and the block pairs they imply (sum of bs*(bs-1)/2)
+# that meta-blocking collects and weights. Below it, per-job latency
+# costs more than the collect.
 DRIVER_EDGE_LIMIT = 5_000_000
 
 

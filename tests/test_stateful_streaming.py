@@ -2,6 +2,7 @@
 event-time windows: cross-batch state survival, exactly-once survivor
 emission, late-data dropping."""
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -55,6 +56,31 @@ def test_stateful_dedup_emits_each_fingerprint_once(spark):
         assert len(rows) == 3
         survivors = {r["doc_id"] for r in rows}
         assert survivors == {1, 3, 11}  # 10 is a cross-batch dup of 1
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_stateful_dedup_null_text_is_empty_text(spark):
+    """NULL text fingerprints as empty text: a NULL and a "" doc form
+    one group with a non-NULL fingerprint, and a later NULL doc is a
+    cross-batch duplicate of it."""
+    work = tempfile.mkdtemp(prefix="statefuldedup_null_")
+    inp = os.path.join(work, "in")
+    out = os.path.join(work, "out")
+    os.makedirs(inp)
+    try:
+        spark.createDataFrame([(5, None), (4, ""), (6, "gamma")],
+                              DOC_SCHEMA).write.parquet(os.path.join(inp, "b0"))
+        _run_dedup(spark, inp, work, out)
+        spark.createDataFrame([(3, None)], DOC_SCHEMA).write.parquet(
+            os.path.join(inp, "b1"))
+        _run_dedup(spark, inp, work, out)
+
+        rows = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+        assert sorted(rows) == [4, 6]
+        empty = rows[4]
+        assert empty["fingerprint"] == hashlib.md5(b"").hexdigest()
+        assert empty["n_dups_in_batch"] == 2
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
