@@ -70,15 +70,3 @@ def progressive_auc(emitted: DataFrame, gt: DataFrame,
         F.max("cum_tps").alias("tps_found"),
         F.round(F.sum("cum_recall") / (F.count("*") + 1.0), 6).alias("auc"),
     )
-
-
-def clusters_recall(assign: DataFrame, gt: DataFrame) -> dict:
-    """Recall where a GT pair counts as found iff both sides share a
-    cluster (evaluation.py:131-156 entity-index-from-clusters check)."""
-    a1 = assign.select(F.col("eid").alias("id1"), F.col("cluster_id").alias("c1"))
-    a2 = assign.select(F.col("eid").alias("id2"), F.col("cluster_id").alias("c2"))
-    g = canonical_pairs(gt)
-    joined = g.join(a1, "id1", "left").join(a2, "id2", "left")
-    tp = joined.where(F.col("c1") == F.col("c2")).count()
-    ng = g.count()
-    return {"tp": tp, "gt": ng, "recall": tp / ng if ng else 0.0}

@@ -25,14 +25,17 @@ weight formulas exist once.
 Spark shape: one postings DataFrame (key, eid, side) for both datasets
 — candidate pairs are a side-1 x side-2 join within key, so Catalyst
 plans exactly one shuffle keyed on the block key, AQE splitting any hot
-key. Entity ids must be disjoint across the two inputs (natural keys of
-one corpus split, or pre-offset ids — the reference's n1-offset remap,
-datamodel.py:176-177, is not needed when ids are already distinct).
+key. Block validity and the size cap are one rule
+(:func:`_ccer_postings`), which ``schema_clustering``'s batched ER
+paths reuse with cluster-scoped keys. Entity ids must be disjoint
+across the two inputs (natural keys of one corpus split, or pre-offset
+ids — the reference's n1-offset remap, datamodel.py:176-177, is not
+needed when ids are already distinct).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -43,6 +46,24 @@ def _is_ccer(postings: DataFrame) -> bool:
     return "side" in postings.columns
 
 
+def _ccer_postings(rows: DataFrame,
+                   max_block_size: int | None = None) -> DataFrame:
+    """Distinct (key, eid, side) postings of the keys with >= 1 entity
+    on EACH side (CCER drop_single_entity_blocks), optionally capped at
+    n1 + n2 <= ``max_block_size``. Side counts come from a groupBy and a
+    left-semi join back, not a per-key window: the aggregate combines
+    map-side, where a window funnels every posting of one hot key
+    through a single task."""
+    p = rows.select("key", "eid", "side").distinct()
+    n1 = F.sum((F.col("side") == 1).cast("int"))
+    n2 = F.sum((F.col("side") == 2).cast("int"))
+    cond = (n1 >= 1) & (n2 >= 1)
+    if max_block_size is not None:
+        cond = cond & (n1 + n2 <= max_block_size)
+    keys = p.groupBy("key").agg(cond.alias("_ok")).where("_ok")
+    return p.join(keys.select("key"), "key", "left_semi")
+
+
 def ccer_blocking(d1: DataFrame, d2: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
                   max_block_size: int | None = None) -> DataFrame:
@@ -50,20 +71,10 @@ def ccer_blocking(d1: DataFrame, d2: DataFrame, id_col: str = "doc_id",
     keeps keys with >= 1 entity on EACH side (CCER
     drop_single_entity_blocks) and optionally caps |D1|+|D2|."""
     def side(df, s):
-        return df.select(
-            F.col(id_col).alias("eid"), F.explode(T.tokens(text_col)).alias("key")
-        ).distinct().withColumn("side", F.lit(s))
+        return df.select(F.explode(T.tokens(text_col)).alias("key"),
+                         F.col(id_col).alias("eid"), F.lit(s).alias("side"))
 
-    p = side(d1, 1).union(side(d2, 2))
-    w = Window.partitionBy("key")
-    p = (
-        p.withColumn("_n1", F.sum((F.col("side") == 1).cast("int")).over(w))
-        .withColumn("_n2", F.sum((F.col("side") == 2).cast("int")).over(w))
-    )
-    cond = (F.col("_n1") >= 1) & (F.col("_n2") >= 1)
-    if max_block_size is not None:
-        cond = cond & (F.col("_n1") + F.col("_n2") <= max_block_size)
-    return p.where(cond).select("key", "eid", "side")
+    return _ccer_postings(side(d1, 1).union(side(d2, 2)), max_block_size)
 
 
 def ccer_pairs(postings: DataFrame) -> DataFrame:

@@ -22,21 +22,25 @@ BestMatch, clustering.py:477-791) are inherently order-dependent scans of
 a desc-sorted edge list; post-matching graphs are small (they are the
 OUTPUT of aggressive pruning), so they run driver-side on a collected
 edge list with an explicit size guard — same strategy the reference
-uses implicitly by being single-process.
+uses implicitly by being single-process. UniqueMapping alone has no
+guard: above DRIVER_EDGE_LIMIT it matches locally-dominant edges in
+Spark rounds until the rest fits, then finishes with the same scan.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-# Graphs of at most this many edges finish on the driver in numpy; two
-# layers use it. Here it bounds the contracted edge set that connected
-# components collects. In comparison_cleaning it bounds both the
-# postings rows and the block pairs they imply (sum of bs*(bs-1)/2)
-# that meta-blocking collects and weights. Below it, per-job latency
-# costs more than the collect.
+# Graphs of at most this many edges finish on the driver; two layers
+# use it. Here it bounds the contracted edge set that connected
+# components collects and the edge set that unique mapping scans. In
+# comparison_cleaning it bounds both the postings rows and the block
+# pairs they imply (sum of bs*(bs-1)/2) that meta-blocking collects and
+# weights. Below it, per-job latency costs more than the collect.
 DRIVER_EDGE_LIMIT = 5_000_000
 
 
@@ -227,18 +231,47 @@ def _collect_edges(edges: DataFrame, weight_col: str):
     return edges.select("id1", "id2", weight_col).collect()
 
 
-def unique_mapping_clustering(edges: DataFrame, similarity_threshold: float = 0.1,
-                              weight_col: str = "sim") -> DataFrame:
-    """UMC (clustering.py:477-539): desc-weight greedy 1-1 matching of
-    edges with w > threshold; ties broken like the reference PQ tuple
-    (1-w, id1, id2). Returns matched pairs (id1, id2, weight).
+# Locally-dominant rounds a unique mapping runs before it gives up.
+# Every round matches at least the globally first edge, so only a
+# pathological weight chain longer than this keeps the edge set above
+# DRIVER_EDGE_LIMIT.
+_UMC_MAX_ROUNDS = 64
 
-    Driver-side scan (sequential by construction); input is the pruned
-    match graph. CCER-only in the reference — exposed generically here.
-    """
-    spark = edges.sparkSession
-    rows = _collect_edges(edges.where(F.col(weight_col) > similarity_threshold),
-                          weight_col)
+
+def _umc_round(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One locally-dominant round over the edge set ``e`` (id1, id2, w):
+    the edges that come first for BOTH endpoints under the greedy
+    scan's order (1-w, id1, id2), and the edges left between the
+    vertices they leave unmatched."""
+    bidir = e.select(F.col("id1").alias("u"), "id1", "id2", "w").union(
+        e.select(F.col("id2").alias("u"), "id1", "id2", "w"))
+    # w desc breaks a float tie of 1-w, so both ends rank the same row
+    wnd = Window.partitionBy("u").orderBy(
+        (1.0 - F.col("w")).asc(), F.col("id1").asc(), F.col("id2").asc(),
+        F.col("w").desc())
+    best = bidir.withColumn("_rn", F.row_number().over(wnd)).where("_rn = 1")
+    # one best row per vertex, so a duplicated edge row matches once
+    dominant = (
+        best.where(F.col("u") == F.col("id1")).select("id1", "id2", "w")
+        .join(best.where(F.col("u") == F.col("id2")).select("id1", "id2", "w"),
+              ["id1", "id2", "w"])
+        .localCheckpoint()
+    )
+    matched = dominant.select(F.col("id1").alias("v")).union(
+        dominant.select(F.col("id2").alias("v")))
+    rest = (
+        e.join(matched.withColumnRenamed("v", "id1"), "id1", "left_anti")
+        .join(matched.withColumnRenamed("v", "id2"), "id2", "left_anti")
+        .select("id1", "id2", "w")
+        .localCheckpoint()
+    )
+    return dominant, rest
+
+
+def _driver_unique_mapping(e: DataFrame) -> DataFrame:
+    """The greedy scan of the small edge set ``e`` (id1, id2, w) on the
+    driver, in the reference PQ order (1-w, id1, id2)."""
+    rows = e.collect()
     rows.sort(key=lambda r: (1 - r[2], r[0], r[1]))
     matched: set = set()
     out = []
@@ -248,72 +281,48 @@ def unique_mapping_clustering(edges: DataFrame, similarity_threshold: float = 0.
         matched.add(id1)
         matched.add(id2)
         out.append((id1, id2, float(w)))
-    return spark.createDataFrame(out, "id1 long, id2 long, weight double")
+    return e.sparkSession.createDataFrame(
+        out, StructType([e.schema["id1"], e.schema["id2"],
+                         StructField("weight", DoubleType())]))
 
 
-def unique_mapping_distributed(edges: DataFrame,
-                               similarity_threshold: float = 0.1,
-                               weight_col: str = "sim",
-                               max_rounds: int = 64) -> DataFrame:
-    """Distributed UMC: iterated LOCALLY-DOMINANT edge matching.
+def unique_mapping_clustering(edges: DataFrame, similarity_threshold: float = 0.1,
+                              weight_col: str = "sim") -> DataFrame:
+    """UMC (clustering.py:477-539): desc-weight greedy 1-1 matching of
+    edges with w > threshold; ties broken like the reference PQ tuple
+    (1-w, id1, id2). Returns matched pairs (id1, id2, weight).
+    CCER-only in the reference — exposed generically here.
 
-    The sequential greedy scan in (1-w, id1, id2) PQ order matches an
-    edge iff it precedes every other edge sharing an endpoint — i.e.
-    iff it is locally dominant under that strict total order. Repeating
-    "match all locally-dominant edges, drop their vertices" therefore
-    produces EXACTLY the sequential output (Preis 1999 / Manne &
-    Bisseling 2007, public results), but each round is two shuffles
-    over the surviving edges — no driver-side edge list, no
-    DRIVER_EDGE_LIMIT. Expected O(log E) rounds on webtext-like weight
-    distributions; identical output verified against
-    unique_mapping_clustering by the shared DuckDB oracle.
+    The greedy scan matches an edge iff it precedes every other edge
+    sharing an endpoint, i.e. iff it is locally dominant. So while the
+    edge set is above ``DRIVER_EDGE_LIMIT``, each round matches every
+    locally-dominant edge in Spark and drops its vertices (Preis 1999;
+    Manne & Bisseling 2007); once it is at most the limit, the rest is
+    collected and finished by the greedy scan on the driver, as
+    :func:`connected_components` finishes. Every route returns exactly
+    the greedy output.
     """
-    spark = edges.sparkSession
     w = F.col(weight_col)
     e = (edges.where(w > similarity_threshold)
          .select("id1", "id2", w.cast("double").alias("w"))
          .localCheckpoint())
     parts = []
-    for _ in range(max_rounds):
-        if e.limit(1).count() == 0:
+    for _ in range(_UMC_MAX_ROUNDS):
+        n = e.count()
+        if n == 0:
             break
-        # per-vertex best incident edge under the PQ order (1-w, id1, id2)
-        bidir = e.select(F.col("id1").alias("u"), "id1", "id2", "w").union(
-            e.select(F.col("id2").alias("u"), "id1", "id2", "w"))
-        wnd = Window.partitionBy("u").orderBy(
-            (1.0 - F.col("w")).asc(), F.col("id1").asc(), F.col("id2").asc())
-        best = (bidir.withColumn("_rn", F.row_number().over(wnd))
-                .where(F.col("_rn") == 1)
-                .select("u", "id1", "id2"))
-        # dominant = best for BOTH endpoints
-        dominant = (
-            best.groupBy("id1", "id2").agg(F.count("*").alias("_n"))
-            .where(F.col("_n") == 2)
-            .select("id1", "id2")
-            .join(e, ["id1", "id2"])
-            .localCheckpoint()
-        )
-        parts.append(dominant)
-        matched = dominant.select(F.col("id1").alias("v")).union(
-            dominant.select(F.col("id2").alias("v"))).distinct()
-        e = (
-            e.join(matched.withColumnRenamed("v", "id1"), "id1", "left_anti")
-            .join(matched.withColumnRenamed("v", "id2"), "id2", "left_anti")
-            .select("id1", "id2", "w")
-            .localCheckpoint()
-        )
-        if e.limit(1).count() == 0:
+        if n <= DRIVER_EDGE_LIMIT:
+            parts.append(_driver_unique_mapping(e))
             break
+        dominant, e = _umc_round(e)
+        parts.append(dominant.withColumnRenamed("w", "weight"))
     else:
         raise RuntimeError(
-            f"unique_mapping_distributed did not converge in {max_rounds} "
-            "rounds — pathological weight chain; raise max_rounds")
+            f"unique_mapping_clustering did not converge in {_UMC_MAX_ROUNDS} "
+            "rounds — pathological weight chain")
     if not parts:
-        return spark.createDataFrame([], "id1 long, id2 long, weight double")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("id1", "id2", F.col("w").alias("weight"))
+        return _driver_unique_mapping(e)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def center_clustering(edges: DataFrame, similarity_threshold: float = 0.5,

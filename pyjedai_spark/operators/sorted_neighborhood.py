@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 
 from ..functions.positions import with_global_position
 
-SCHEMES = {"ACF", "NCF", "ID", "COSINE", "DICE"}
-
 
 def sorted_positions(postings: DataFrame) -> DataFrame:
     """(pos, eid): the PositionIndex flattened — one row per posting,

@@ -1390,21 +1390,6 @@ def q_unique_mapping(spark, sf_dir):
                                         weight_col="sim")
 
 
-def q_unique_mapping_dist(spark, sf_dir):
-    """Distributed UMC (iterated locally-dominant matching) on the SAME
-    input as `unique_mapping` — and the same oracle: the two algorithms
-    are provably output-identical, and the shared DuckDB greedy-scan
-    replica proves it per round."""
-    docs = _docs(spark, sf_dir)
-    p = BB.standard_blocking(docs)
-    cands = CC.cardinality_node_pruning(p, "JS", num_entities=docs.count())
-    cands = cands.where(F.col("id1") % 8 == 0)
-    m = M.entity_matching(cands.select("id1", "id2"), docs, metric="cosine",
-                          similarity_threshold=0.55, round_to=6)
-    return CL.unique_mapping_distributed(m, similarity_threshold=0.55,
-                                         weight_col="sim")
-
-
 def q_qgrams_blocking(spark, sf_dir):
     p = BB.qgrams_blocking(_docs(spark, sf_dir), q=4)
     return p.groupBy(F.col("key")).agg(F.count("*").alias("block_size"))
@@ -1763,7 +1748,8 @@ QUERIES = {
     # rows-only (no SQL oracle): pandas-UDF path & sequential clusterer
     "webtext_minhash_clusters": q_webtext_minhash_clusters,
     "unique_mapping": q_unique_mapping,
-    "unique_mapping_dist": q_unique_mapping_dist,
+    # one UMC now picks its rounds or the driver scan from the edge count
+    "unique_mapping_dist": q_unique_mapping,
     "qgrams_blocking": q_qgrams_blocking,
     "suffix_blocking": q_suffix_blocking,
     "ext_suffix_blocking": q_ext_suffix_blocking,

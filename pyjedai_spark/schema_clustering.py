@@ -32,9 +32,9 @@ Scale deltas (deliberate, documented):
   shape is ONE batched plan with ``cluster_id`` folded into the
   blocking key: blocks never span clusters, so per-cluster independence
   is free and the loop disappears (:func:`schema_clustered_er`). The
-  reference-faithful per-cluster loop is kept for workflows whose
-  scalar stages (purge thresholds, greedy UMC) are inherently
-  per-cluster (:func:`schema_clustered_er_looped`);
+  reference-faithful per-cluster loop lives in
+  ``tests/test_schema_clustering.py`` as the reference the batched plan
+  is checked against;
 - the reference collapses each cluster's pairs into a dict keyed by
   id1 (transform_mapping_to_ids, clustering.py:65-84), silently
   overwriting earlier matches in python-set iteration order; we return
@@ -59,9 +59,9 @@ from .operators import clustering as CL
 from .operators import comparison_cleaning as CC
 from .operators import matching as M
 
-# composite node id for per-cluster connected components: one CC run
-# over (cluster, entity) pairs instead of a driver loop. Entity ids
-# must stay below this offset (asserted).
+# composite node id for per-cluster blocking, matching and connected
+# components: one run over (cluster, entity) ids instead of a driver
+# loop. Entity ids must stay below this offset.
 _ENC = 1 << 40
 
 
@@ -216,52 +216,22 @@ def schema_clustered_er(d1: DataFrame, d2: DataFrame,
         return mem.where(F.col("side") == side).join(
             docs.select(F.col(idc).alias("eid"), text_col), "eid")
 
-    m1, m2 = side_docs(docs1, 1), side_docs(docs2, 2)
-
-    # cluster-scoped CCER standard blocking: key = (cluster_id, token),
-    # both sides required per scoped block
-    def postings(m):
-        return m.select(
-            "cluster_id", "eid", "side",
-            F.explode(T.tokens(text_col)).alias("tok")).distinct()
-
-    p = postings(m1).unionByName(postings(m2))
-    # per-(cluster, token) side counts via groupBy + semi-join-back,
-    # NOT Window.partitionBy(cluster_id, tok): the window funnels every
-    # posting of one hot (cluster, boilerplate-token) key through a
-    # single task; the aggregate gets a map-side partial combine and
-    # the semi-join back is a hash join on the same key (r4 verdict
-    # item 2 — same pattern as exact_dedup/url_dedup)
-    cond = (F.col("_n1") >= 1) & (F.col("_n2") >= 1)
-    if max_block is not None:
-        cond = cond & ((F.col("_n1") + F.col("_n2")) <= max_block)
-    keys = (p.groupBy("cluster_id", "tok")
-            .agg(F.sum((F.col("side") == 1).cast("int")).alias("_n1"),
-                 F.sum((F.col("side") == 2).cast("int")).alias("_n2"))
-            .where(cond)
-            .select("cluster_id", "tok"))
-    # stage barrier: the kept postings feed BOTH sides of the pair join
-    # (and the keys aggregate builds on both probe subplans); without
-    # it Catalyst pushes the side filters below the semi join and
-    # re-tokenizes each branch — at cluster scale this materialization
-    # is the per-stage blocking checkpoint the pipeline writes anyway
-    p = p.join(keys, ["cluster_id", "tok"], "left_semi").localCheckpoint()
-
-    a = p.where(F.col("side") == 1).select(
-        "cluster_id", "tok", F.col("eid").alias("id1"))
-    b = p.where(F.col("side") == 2).select(
-        "cluster_id", "tok", F.col("eid").alias("id2"))
-    pairs = a.join(b, ["cluster_id", "tok"]) \
-        .select("cluster_id", "id1", "id2").distinct()
-
-    # composite (cluster, entity) node ids -> ONE matching + CC pass
-    docs_enc = (
-        m1.unionByName(m2)
-        .select(((F.col("cluster_id") + 2) * _ENC + F.col("eid")).alias("enc"),
-                F.col(text_col)))
-    pairs_enc = pairs.select(
-        ((F.col("cluster_id") + 2) * _ENC + F.col("id1")).alias("id1"),
-        ((F.col("cluster_id") + 2) * _ENC + F.col("id2")).alias("id2"))
+    # composite (cluster, entity) node ids -> ONE blocking, matching and
+    # CC pass; the cluster id is folded into every block key, so blocks
+    # never span clusters
+    m = side_docs(docs1, 1).unionByName(side_docs(docs2, 2)).withColumn(
+        "enc", (F.col("cluster_id") + 2) * _ENC + F.col("eid"))
+    rows = m.select("cluster_id", "enc", "side",
+                    F.explode(T.tokens(text_col)).alias("tok")).select(
+        F.concat_ws("\x1f", F.col("cluster_id").cast("string"),
+                    "tok").alias("key"),
+        F.col("enc").alias("eid"), "side")
+    # stage barrier: the kept postings feed BOTH sides of the pair join;
+    # without it Catalyst pushes the side filters below the semi join
+    # and re-tokenizes each branch
+    p = X._ccer_postings(rows, max_block).localCheckpoint()
+    pairs_enc = X.ccer_pairs(p)
+    docs_enc = m.select("enc", text_col)
     matches = M.entity_matching(
         pairs_enc, docs_enc, metric=metric,
         similarity_threshold=similarity_threshold,
@@ -286,59 +256,6 @@ def schema_clustered_er(d1: DataFrame, d2: DataFrame,
         .select(F.col("schema_cluster").alias("cluster_id"), "id1", "id2")
         .distinct())
     return out
-
-
-def schema_clustered_er_looped(d1: DataFrame, d2: DataFrame,
-                               clusters: DataFrame,
-                               docs1: DataFrame, docs2: DataFrame,
-                               workflow=None,
-                               id_col: str = "doc_id",
-                               id_col2: str | None = None,
-                               text_col: str = "text") -> DataFrame:
-    """Reference-faithful per-cluster loop (clustering.py:255-273): run
-    a full BlockingBasedWorkFlow per qualifying cluster and union the
-    resulting pairs. Use when the workflow has per-dataset scalar
-    stages (purge thresholds, greedy UMC) that cannot be batched; the
-    cluster count is attribute-bounded, so the loop is driver-cheap
-    even at web scale. ``id_col2`` keys ``d2``/``docs2`` (default
-    ``id_col``); the workflow sees both sides keyed by ``id_col``."""
-    from .workflow import BlockingBasedWorkFlow
-
-    wf = workflow or BlockingBasedWorkFlow.best_ccer()
-    id2 = id_col2 or id_col
-    mem = cluster_member_rows(d1, d2, clusters, id_col, id2).localCheckpoint()
-    cids = [r["cluster_id"]
-            for r in mem.select("cluster_id").distinct().collect()]
-    spark = d1.sparkSession
-    outs = []
-    for cid in sorted(cids):
-        sub = mem.where(F.col("cluster_id") == cid)
-        s1 = docs1.join(sub.where(F.col("side") == 1).select(
-            F.col("eid").alias(id_col)), id_col)
-        s2 = docs2.join(sub.where(F.col("side") == 2).select(
-            F.col("eid").alias(id2)), id2).withColumnRenamed(id2, id_col)
-        res = wf.run(s1, id_col=id_col, text_col=text_col, d2=s2)
-        if "id1" not in res.columns:
-            # (eid, cluster_id) components -> cross-side pairs (size-2
-            # CCER components are one per side); pair-shaped clusterer
-            # output (unique mapping, best match) is already D1 x D2
-            res = (res.join(sub.withColumnRenamed("cluster_id", "_sc"),
-                            "eid")
-                   .groupBy("cluster_id")
-                   .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
-                        .alias("id1"),
-                        F.min(F.when(F.col("side") == 2, F.col("eid")))
-                        .alias("id2"))
-                   .where(F.col("id1").isNotNull()
-                          & F.col("id2").isNotNull()))
-        outs.append(res.select(F.lit(cid).alias("cluster_id"), "id1", "id2"))
-    if not outs:
-        return spark.createDataFrame(
-            [], "cluster_id long, id1 long, id2 long")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.distinct()
 
 
 # ------------------------------------------------------------------ RDF
@@ -459,7 +376,7 @@ def rdf_subject_er(t1: DataFrame, t2: DataFrame, clusters: DataFrame,
     semantics) and matches never span clusters; greedy 1-1 matching
     over the union of cluster-disjoint vertex sets equals per-cluster
     greedy exactly, so one :func:`~pyjedai_spark.operators.clustering.
-    unique_mapping_distributed` pass finishes every cluster at once.
+    unique_mapping_clustering` pass finishes every cluster at once.
     Entity ids inside a cluster are the reference's insertion order
     (subjects ranked by first triple), preserving its UMC tie-break;
     the reference collapses output to a last-cluster-wins dict — we
@@ -525,33 +442,15 @@ def rdf_subject_er(t1: DataFrame, t2: DataFrame, clusters: DataFrame,
         + F.col("lid")).localCheckpoint()
 
     # cluster-scoped CCER standard blocking
-    def post(s):
-        return (subj.where(F.col("side") == s)
-                .select("cluster_id", "enc",
+    rows = (subj.select("cluster_id", "enc", "side",
                         F.explode(T.tokens("text")).alias("tok"))
-                .distinct()
-                .select(F.concat_ws(
-                    "\x1f", F.col("cluster_id").cast("string"),
-                    "tok").alias("key"),
-                    F.col("enc").alias("eid"), F.lit(s).alias("side")))
-
-    p = post(1).unionByName(post(2))
-    # side counts by groupBy + semi-join-back (map-side partial), not a
-    # per-key window — and a block-size cap before any enumeration (r4
-    # verdict item 2: hot boilerplate tokens otherwise funnel one task
-    # and feed uncapped quadratic blocks into filtering)
-    cond = (F.col("_n1") >= 1) & (F.col("_n2") >= 1)
-    if max_block is not None:
-        cond = cond & ((F.col("_n1") + F.col("_n2")) <= max_block)
-    keys = (p.groupBy("key")
-            .agg(F.sum((F.col("side") == 1).cast("int")).alias("_n1"),
-                 F.sum((F.col("side") == 2).cast("int")).alias("_n2"))
-            .where(cond)
-            .select("key"))
-    # stage barrier (same reason as schema_clustered_er: filtering +
-    # WNP reference the kept postings multiple times)
-    p = (p.join(keys, "key", "left_semi")
-         .select("key", "eid", "side").localCheckpoint())
+            .select(F.concat_ws("\x1f", F.col("cluster_id").cast("string"),
+                                "tok").alias("key"),
+                    F.col("enc").alias("eid"), "side"))
+    # block-size cap before any enumeration: hot boilerplate tokens
+    # otherwise feed uncapped quadratic blocks into filtering. Stage
+    # barrier: filtering + WNP reference the kept postings repeatedly
+    p = X._ccer_postings(rows, max_block).localCheckpoint()
     p = BC.block_filtering(p, filtering_ratio)
     e = CC.weighted_node_pruning(p, weighting_scheme)
 
@@ -592,7 +491,7 @@ def rdf_subject_er(t1: DataFrame, t2: DataFrame, clusters: DataFrame,
          .where(F.col("sim") > em_threshold)
          .select("id1", "id2", "sim"))
 
-    umc = CL.unique_mapping_distributed(m, similarity_threshold=umc_threshold)
+    umc = CL.unique_mapping_clustering(m, similarity_threshold=umc_threshold)
 
     names = subj.select("enc", "cluster_id", "side", "subj")
     return (umc

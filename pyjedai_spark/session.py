@@ -59,8 +59,11 @@ def get_spark(
     ``master`` falls back to ``local[$SPARK_GRAFT_CPUS]`` so the same
     entry points run under spark-submit on a cluster (where master is
     provided externally and this arg stays None -> builder default).
+    ``SPARK_GRAFT_CPUS`` defaults to the cores this process may run on,
+    as ``nproc`` counts them.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     confs = dict(DEFAULT_CONFS)

@@ -1,6 +1,8 @@
 """Toy-graph semantics for the driver-side sequential clusterers
 (reference clustering.py:793-1634 re-expressed; see each docstring)."""
 
+import pytest
+
 from pyjedai_spark.operators import clustering as CL
 
 
@@ -72,19 +74,89 @@ def test_ricochet_centers_cover_all_matched_entities(spark):
     assert 5 in g45
 
 
-def test_unique_mapping_distributed_equals_sequential(spark):
-    """Iterated locally-dominant matching == the sequential greedy scan
-    (Preis local-dominance), on a corpus with real weight ties."""
-    from pyjedai_spark.operators import clustering as CL
+def _greedy(rows, threshold):
+    """The reference UMC scan: edges with w > threshold in PQ order
+    (1-w, id1, id2), each matched unless an endpoint already is."""
+    matched, out = set(), []
+    for id1, id2, w in sorted((r for r in rows if r[2] > threshold),
+                              key=lambda r: (1 - r[2], r[0], r[1])):
+        if id1 not in matched and id2 not in matched:
+            matched |= {id1, id2}
+            out.append((id1, id2, w))
+    return sorted(out)
+
+
+def _umc_routes(monkeypatch, path, n_edges):
+    """Set DRIVER_EDGE_LIMIT for ``path`` and count the distributed
+    rounds and driver finishes unique mapping then runs."""
+    calls = {"rounds": 0, "finishes": 0}
+    umc_round, driver = CL._umc_round, CL._driver_unique_mapping
+
+    def count(key, fn):
+        return lambda e: calls.__setitem__(key, calls[key] + 1) or fn(e)
+
+    monkeypatch.setattr(CL, "_umc_round", count("rounds", umc_round))
+    monkeypatch.setattr(CL, "_driver_unique_mapping",
+                        count("finishes", driver))
+    if path == "distributed":
+        monkeypatch.setattr(CL, "DRIVER_EDGE_LIMIT", 0)
+    elif path == "composed":
+        monkeypatch.setattr(CL, "DRIVER_EDGE_LIMIT", n_edges // 2)
+    return calls
+
+
+def _assert_route(calls, path):
+    if path == "distributed":
+        assert calls["rounds"] >= 1 and calls["finishes"] == 0, calls
+    elif path == "composed":
+        assert calls["rounds"] >= 1 and calls["finishes"] == 1, calls
+    else:
+        assert calls == {"rounds": 0, "finishes": 1}, calls
+
+
+@pytest.mark.parametrize("path", ["distributed", "composed", "driver"])
+def test_unique_mapping_distributed_equals_sequential(spark, monkeypatch,
+                                                      path):
+    """Locally-dominant rounds (DRIVER_EDGE_LIMIT 0), rounds finished
+    by the driver scan (a limit of half the edge count) and the driver
+    scan alone (the default limit) all give the sequential greedy
+    output (Preis local-dominance), on a corpus with real weight ties."""
     from pyjedai_spark.operators import dedup as DD
     from pyjedai_spark.synth import webtext_df
 
     docs, _ = webtext_df(spark, n_docs=200, seed=41)
     edges = DD.ngram_jaccard_pairs(docs, n=3, threshold=0.3,
                                    id_col="eid", text_col="text") \
-        .withColumnRenamed("jaccard", "sim")
-    seq = {(r["id1"], r["id2"]) for r in CL.unique_mapping_clustering(
-        edges, similarity_threshold=0.3).collect()}
-    dist = {(r["id1"], r["id2"]) for r in CL.unique_mapping_distributed(
-        edges, similarity_threshold=0.3).collect()}
-    assert seq == dist and seq
+        .withColumnRenamed("jaccard", "sim").localCheckpoint()
+    rows = [tuple(r) for r in edges.select("id1", "id2", "sim").collect()]
+    want = _greedy(rows, 0.3)
+    calls = _umc_routes(monkeypatch, path,
+                        sum(1 for r in rows if r[2] > 0.3))
+    got = sorted(tuple(r) for r in CL.unique_mapping_clustering(
+        edges, similarity_threshold=0.3).collect())
+    assert want and got == want
+    _assert_route(calls, path)
+
+
+@pytest.mark.parametrize("path", ["distributed", "composed", "driver"])
+@pytest.mark.parametrize("rows,want", [
+    # a repeated row is one edge to the greedy scan; the rounds once
+    # joined the dominant pairs back to the edge set and emitted (1, 2)
+    # twice
+    ([(1, 2, 0.9), (1, 2, 0.9), (2, 3, 0.85), (3, 4, 0.8)],
+     [(1, 2, 0.9), (3, 4, 0.8)]),
+    # both ends of a self-loop are one vertex with one best row; the
+    # rounds once required two and never matched it, so they ran out
+    ([(1, 1, 0.95), (1, 2, 0.9), (2, 3, 0.85), (3, 4, 0.8)],
+     [(1, 1, 0.95), (2, 3, 0.85)]),
+], ids=["duplicate_row", "self_loop"])
+def test_unique_mapping_odd_edge_rows_match_greedy(spark, monkeypatch, path,
+                                                   rows, want):
+    """Every route returns the greedy scan's matching on a duplicated
+    edge row and on a self-loop."""
+    edges = spark.createDataFrame(rows, "id1 long, id2 long, sim double")
+    calls = _umc_routes(monkeypatch, path, len(rows))
+    got = sorted(tuple(r) for r in CL.unique_mapping_clustering(
+        edges, similarity_threshold=0.1).collect())
+    assert got == _greedy(rows, 0.1) == want
+    _assert_route(calls, path)

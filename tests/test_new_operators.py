@@ -153,6 +153,68 @@ def test_ccer_pair_space_is_cross_dataset_only(spark, docs):
         assert r["id1"] % 2 == 0 and r["id2"] % 2 == 1
 
 
+def _window_ccer_postings(rows, max_block_size):
+    """The per-key window form ``ccer_blocking`` used before its rule
+    moved into ``ccer._ccer_postings``: distinct postings, side counts
+    over ``Window.partitionBy("key")``, both sides present and
+    n1 + n2 <= cap."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("key")
+    p = (rows.distinct()
+         .withColumn("_n1", F.sum((F.col("side") == 1).cast("int")).over(w))
+         .withColumn("_n2", F.sum((F.col("side") == 2).cast("int")).over(w)))
+    cond = (F.col("_n1") >= 1) & (F.col("_n2") >= 1)
+    if max_block_size is not None:
+        cond = cond & (F.col("_n1") + F.col("_n2") <= max_block_size)
+    return p.where(cond).select("key", "eid", "side")
+
+
+def test_ccer_postings_equal_window_form(spark):
+    """The groupBy + semi-join rule keeps exactly the window form's
+    postings: a one-sided key goes, a key of exactly the cap stays, a
+    key one over it goes, and duplicate rows count once."""
+    from pyjedai_spark.operators import ccer as X
+
+    rows = [
+        ("one_sided", 1, 1), ("one_sided", 2, 1),
+        ("at_cap", 1, 1), ("at_cap", 2, 1), ("at_cap", 10, 2),
+        ("over_cap", 1, 1), ("over_cap", 2, 1), ("over_cap", 10, 2),
+        ("over_cap", 11, 2),
+        # five rows, three distinct postings: at the cap once deduped
+        ("dup", 1, 1), ("dup", 1, 1), ("dup", 10, 2), ("dup", 10, 2),
+        ("dup", 11, 2),
+        ("pair", 2, 1), ("pair", 11, 2),
+    ]
+    df = spark.createDataFrame(rows, "key string, eid long, side int")
+    for cap in (None, 3):
+        got = sorted(tuple(r) for r in X._ccer_postings(df, cap).collect())
+        want = sorted(tuple(r) for r in
+                      _window_ccer_postings(df, cap).collect())
+        assert got == want, cap
+    kept = {r["key"] for r in X._ccer_postings(df, 3).collect()}
+    assert kept == {"at_cap", "dup", "pair"}
+
+    # ccer_blocking builds its (key, eid, side) rows from the two inputs
+    # and keeps what the window form keeps over the same rows; the
+    # repeated input row makes duplicate rows
+    d1 = spark.createDataFrame([(1, "a b"), (2, "a c"), (2, "a c")],
+                               "doc_id long, text string")
+    d2 = spark.createDataFrame([(10, "a b d"), (11, "c d")],
+                               "doc_id long, text string")
+    rows2 = d1.select(F.explode(T.tokens("text")).alias("key"),
+                      F.col("doc_id").alias("eid"),
+                      F.lit(1).alias("side")).union(
+        d2.select(F.explode(T.tokens("text")).alias("key"),
+                  F.col("doc_id").alias("eid"), F.lit(2).alias("side")))
+    for cap in (None, 2, 3):
+        got = sorted(tuple(r) for r in X.ccer_blocking(
+            d1, d2, max_block_size=cap).collect())
+        want = sorted(tuple(r) for r in
+                      _window_ccer_postings(rows2, cap).collect())
+        assert got == want, cap
+
+
 # two-sided postings (key, eid, side) with interleaved ids: side 1 holds
 # 10, 3, 7 and side 2 holds 1, 8, 5, so id order says nothing of side
 _CCER_POSTINGS = [

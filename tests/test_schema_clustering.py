@@ -2,7 +2,10 @@
 attribute-level ER workflow + per-cluster entity resolution, plus the
 fused block-cleaning stage it exercises."""
 
+from functools import reduce
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -27,6 +30,46 @@ def two_tables(spark):
          (12, "bob jones", None, "q3")],
         "rid long, fullname string, town string, note string")
     return d1, d2
+
+
+def _schema_clustered_er_looped(d1, d2, clusters, docs1, docs2, workflow,
+                                id_col="doc_id", id_col2=None,
+                                text_col="text"):
+    """Reference-faithful per-cluster loop (clustering.py:255-273): run
+    a full BlockingBasedWorkFlow per qualifying cluster and union the
+    resulting pairs — the reference the batched single plan
+    (``schema_clustered_er``) is checked against. ``id_col2`` keys
+    ``d2``/``docs2`` (default ``id_col``); the workflow sees both sides
+    keyed by ``id_col``."""
+    from pyjedai_spark.schema_clustering import cluster_member_rows
+
+    id2 = id_col2 or id_col
+    mem = cluster_member_rows(d1, d2, clusters, id_col, id2).localCheckpoint()
+    cids = [r["cluster_id"]
+            for r in mem.select("cluster_id").distinct().collect()]
+    outs = []
+    for cid in sorted(cids):
+        sub = mem.where(F.col("cluster_id") == cid)
+        s1 = docs1.join(sub.where(F.col("side") == 1).select(
+            F.col("eid").alias(id_col)), id_col)
+        s2 = docs2.join(sub.where(F.col("side") == 2).select(
+            F.col("eid").alias(id2)), id2).withColumnRenamed(id2, id_col)
+        res = workflow.run(s1, id_col=id_col, text_col=text_col, d2=s2)
+        if "id1" not in res.columns:
+            # (eid, cluster_id) components -> cross-side pairs (size-2
+            # CCER components are one per side); pair-shaped clusterer
+            # output (unique mapping, best match) is already D1 x D2
+            res = (res.join(sub.withColumnRenamed("cluster_id", "_sc"),
+                            "eid")
+                   .groupBy("cluster_id")
+                   .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
+                        .alias("id1"),
+                        F.min(F.when(F.col("side") == 2, F.col("eid")))
+                        .alias("id2"))
+                   .where(F.col("id1").isNotNull()
+                          & F.col("id2").isNotNull()))
+        outs.append(res.select(F.lit(cid).alias("cluster_id"), "id1", "id2"))
+    return reduce(DataFrame.unionByName, outs).distinct()
 
 
 def test_attribute_entities_names_values_hybrid(spark, two_tables):
@@ -148,9 +191,7 @@ def test_batched_er_equals_looped(spark, two_tables):
     reference-faithful per-cluster loop on the same inputs."""
     from pyjedai_spark.schema_clustering import (schema_attribute_clusters,
                                                  schema_clustered_er)
-    from pyjedai_spark.operators import ccer as X
-    from pyjedai_spark.operators import clustering as CL
-    from pyjedai_spark.operators import matching as M
+    from pyjedai_spark.workflow import BlockingBasedWorkFlow
 
     d1, d2 = two_tables
     clusters = schema_attribute_clusters(d1, d2, on="values", id_col="id",
@@ -164,44 +205,26 @@ def test_batched_er_equals_looped(spark, two_tables):
                    d1, d2, clusters, docs1, docs2, id_col="id",
                    id_col2="rid", similarity_threshold=0.5).collect()}
 
-    # loop the clusters driver-side with the same primitive stages
-    from pyjedai_spark.schema_clustering import cluster_member_rows
-
-    mem = cluster_member_rows(d1, d2, clusters, "id", "rid").localCheckpoint()
-    looped = set()
-    for cid in [r["cluster_id"]
-                for r in mem.select("cluster_id").distinct().collect()]:
-        sub = mem.where(F.col("cluster_id") == cid)
-        s1 = docs1.join(sub.where("side = 1").select(
-            F.col("eid").alias("id")), "id")
-        s2 = docs2.join(sub.where("side = 2").select(
-            F.col("eid").alias("rid")), "rid").withColumnRenamed("rid", "id")
-        p = X.ccer_blocking(s1, s2, id_col="id", text_col="text")
-        cand = X.ccer_pairs(p)
-        both = s1.select(F.col("id").alias("eid"), "text").unionByName(
-            s2.select(F.col("id").alias("eid"), "text"))
-        m = M.entity_matching(cand, both, metric="cosine",
-                              similarity_threshold=0.5, id_col="eid",
-                              text_col="text", round_to=6)
-        cc = CL.connected_components_clustering(m.select("id1", "id2"),
-                                                dirty=False)
-        sided = cc.join(sub.select(F.col("eid"), "side"), "eid")
-        pair = (sided.groupBy("cluster_id")
-                .agg(F.min(F.when(F.col("side") == 1, F.col("eid")))
-                     .alias("id1"),
-                     F.min(F.when(F.col("side") == 2, F.col("eid")))
-                     .alias("id2"))
-                .where("id1 is not null and id2 is not null"))
-        looped |= {(cid, r["id1"], r["id2"]) for r in pair.collect()}
+    # loop the clusters driver-side with the same stages: CCER standard
+    # blocking, D1 x D2 pairs, cosine matching, 2-element components
+    wf = BlockingBasedWorkFlow(
+        entity_matching={"method": "entity_matching",
+                         "params": {"metric": "cosine",
+                                    "similarity_threshold": 0.5}},
+        clustering={"method": "connected_components"})
+    looped = {(r["cluster_id"], r["id1"], r["id2"])
+              for r in _schema_clustered_er_looped(
+                  d1, d2, clusters, docs1, docs2, wf, id_col="id",
+                  id_col2="rid").collect()}
     assert batched == looped
 
 
 def test_looped_er_default_workflow(spark, two_tables):
-    """The per-cluster loop with its default workflow (best CCER, which
-    ends in unique mapping and so returns pairs, not components) yields
-    the 1-1 matches of every qualifying cluster."""
-    from pyjedai_spark.schema_clustering import (schema_attribute_clusters,
-                                                 schema_clustered_er_looped)
+    """The per-cluster loop with the best-CCER workflow (which ends in
+    unique mapping and so returns pairs, not components) yields the 1-1
+    matches of every qualifying cluster."""
+    from pyjedai_spark.schema_clustering import schema_attribute_clusters
+    from pyjedai_spark.workflow import BlockingBasedWorkFlow
 
     d1, d2 = two_tables
     clusters = schema_attribute_clusters(d1, d2, on="values", id_col="id",
@@ -210,8 +233,9 @@ def test_looped_er_default_workflow(spark, two_tables):
                                          ).localCheckpoint()
     docs1 = d1.select("id", F.coalesce("name", F.lit("")).alias("text"))
     docs2 = d2.select("rid", F.coalesce("fullname", F.lit("")).alias("text"))
-    out = schema_clustered_er_looped(d1, d2, clusters, docs1, docs2,
-                                     id_col="id", id_col2="rid")
+    out = _schema_clustered_er_looped(d1, d2, clusters, docs1, docs2,
+                                      BlockingBasedWorkFlow.best_ccer(),
+                                      id_col="id", id_col2="rid")
     assert out.columns == ["cluster_id", "id1", "id2"]
     got = {(r["id1"], r["id2"]) for r in out.collect()}
     assert got == {(0, 10), (1, 12)}
