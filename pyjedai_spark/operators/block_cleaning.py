@@ -14,7 +14,7 @@ from itertools import accumulate
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ccer import _is_ccer
+from .ccer import _ccer_postings, _is_ccer
 
 
 def java_math_round(x: float) -> int:
@@ -123,15 +123,7 @@ def _filter_with_cards(p: DataFrame, ratio: float,
     if _is_ccer(p):
         # CCER validity after the rebuild: a block survives only if BOTH
         # datasets still contribute (drop_single_entity_blocks CCER branch)
-        kept = kept.select("key", "eid", "side")
-        kw = Window.partitionBy("key")
-        kept = (
-            kept.withColumn("_n1", F.sum((F.col("side") == 1).cast("int")).over(kw))
-            .withColumn("_n2", F.sum((F.col("side") == 2).cast("int")).over(kw))
-            .where((F.col("_n1") >= 1) & (F.col("_n2") >= 1))
-            .select("key", "eid", "side")
-        )
-        return kept
+        return _ccer_postings(kept)
     kept = kept.select("key", "eid")
     # rebuilt blocks may now be singletons -> drop (block_cleaning.py:97)
     from .block_building import keep_multi_entity_blocks

@@ -1748,7 +1748,7 @@ QUERIES = {
     # rows-only (no SQL oracle): pandas-UDF path & sequential clusterer
     "webtext_minhash_clusters": q_webtext_minhash_clusters,
     "unique_mapping": q_unique_mapping,
-    # one UMC now picks its rounds or the driver scan from the edge count
+    # one UMC picks Spark rounds or the driver scan from the edge count
     "unique_mapping_dist": q_unique_mapping,
     "qgrams_blocking": q_qgrams_blocking,
     "suffix_blocking": q_suffix_blocking,

@@ -93,7 +93,10 @@ def _umc_routes(monkeypatch, path, n_edges):
     umc_round, driver = CL._umc_round, CL._driver_unique_mapping
 
     def count(key, fn):
-        return lambda e: calls.__setitem__(key, calls[key] + 1) or fn(e)
+        def counted(e):
+            calls[key] += 1
+            return fn(e)
+        return counted
 
     monkeypatch.setattr(CL, "_umc_round", count("rounds", umc_round))
     monkeypatch.setattr(CL, "_driver_unique_mapping",
